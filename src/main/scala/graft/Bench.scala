@@ -25,20 +25,12 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    org.apache.spark.sql.graft.RowNumberTopKRewrite.install(spark)
+    val spark = GraftSession()
     // "Asked to cache already cached data" is EXPECTED here and only here:
     // min-of-2 timing deliberately keeps the cache warm between a query's
     // own runs, so run 2's .cache() call re-registers a live entry. No
-    // query double-caches within one run (graft.CacheAudit sweeps the
-    // catalog and reports zero), so the warning carries no signal in this
+    // query double-caches within one run (CacheHygieneSpec asserts it over
+    // the whole catalog), so the warning carries no signal in this
     // main — mute the logger rather than pollute the tail with ~100 lines.
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.CacheManager",
@@ -146,10 +138,15 @@ object Bench {
       .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val remeasJson = remeasuredNames.map("\"" + _ + "\"").mkString("[", ",", "]")
     val scratch = graft.streaming.ReplayOps.scratchRoot
+    // the engine the timings ran on, read back from the session itself
+    val engine =
+      s"""{"cpus":${spark.sparkContext.defaultParallelism},""" +
+      s""""shuffle_partitions":${spark.conf.get("spark.sql.shuffle.partitions")},""" +
+      s""""max_heap_mb":${Runtime.getRuntime.maxMemory >> 20},"spark":"${spark.version}"}"""
     val meta =
       s""""canary_floor_sec":${math.rint(canaryFloor * 1e4) / 1e4},""" +
       s""""stall_retries":$retried,"remeasured":$remeasJson,""" +
-      s""""replay_scratch_root":"$scratch""""
+      s""""replay_scratch_root":"$scratch","engine":$engine"""
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,$meta,"sf":"$sfDir"}"""
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.json")
@@ -165,17 +162,21 @@ object Bench {
     // emit as many entries as fit a hard character budget, HEAVIEST first:
     // the slow queries carry all the perf signal (the median query is
     // ~0.05 s, pure noise round-over-round), and the budget keeps the line
-    // + sbt suffix safely inside the 2000-char tail. Full map: BENCH.json.
+    // + sbt suffix safely inside the 2000-char tail. An entry that does not
+    // fit is skipped and shorter later ones still get their turn. Full map:
+    // BENCH.json.
     val stdoutBudget = 1550 // chars for the queries map body
     val topEntries = {
       val b = new StringBuilder
       var used = 0
-      remeasured.sortBy(-_._2).iterator.takeWhile { case (k, v) =>
+      remeasured.sortBy(-_._2).foreach { case (k, v) =>
         val e = s""""$k":${math.rint(v * 1000) / 1000}"""
-        val ok = used + e.length + 1 <= stdoutBudget
-        if (ok) { if (used > 0) b.append(','); b.append(e); used += e.length + 1 }
-        ok
-      }.size
+        if (used + e.length + 1 <= stdoutBudget) {
+          if (used > 0) b.append(',')
+          b.append(e)
+          used += e.length + 1
+        }
+      }
       b.toString
     }
     println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${remeasured.size},"n_failed":${failed.size},"queries":{$topEntries},"sf":"$sfDir"}""")

@@ -1,0 +1,30 @@
+package graft
+import org.apache.spark.sql.SparkSession
+
+/** The one place a Spark session is built: every main and the test suites
+  * get the same engine, so a plan or a timing means the same thing
+  * whichever entry point produced it.
+  *
+  *   - `local[cpus]` with one shuffle partition per core; `cpus` defaults
+  *     to SPARK_GRAFT_CPUS (4 when unset)
+  *   - UTC session zone, UI off, log level WARN
+  *   - int64-µs parquet timestamps, so the DuckDB oracle reads our parquet
+  *     as bit-identical values to its own output (no INT96 ambiguity)
+  *   - the engine extensions: the row_number top-k rewrite, the TopKPerKey
+  *     and AsOfJoin strategies ([[org.apache.spark.sql.graft.RowNumberTopKRewrite.install]])
+  */
+object GraftSession {
+  def apply(cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .appName("graft")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    org.apache.spark.sql.graft.RowNumberTopKRewrite.install(spark)
+    spark
+  }
+}

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import graft.streaming.{KvUpsertSink, StreamJobs, TopicTableSink}
 
@@ -57,16 +56,7 @@ object Main {
     val mode = opts.getOrElse("mode", "summary")
     val checkpoint = opts.get("checkpoint")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    org.apache.spark.sql.graft.RowNumberTopKRewrite.install(spark)
+    val spark = GraftSession()
 
     // subscribe: the comma list labels the stream (multi-topic subscribe is
     // source config on a real Kafka source); first topic tags the records

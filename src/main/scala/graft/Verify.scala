@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, to_json}
 import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
 import java.nio.file.{Files, Paths}
@@ -59,20 +59,9 @@ object Verify {
     // optional extra args: only dump these queries (dev loop; driver passes 2)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args.drop(2).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // int64-µs timestamps so the driver's DuckDB read of our parquet sees
-      // bit-identical values to its own oracle output (no INT96 ambiguity)
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // engine extension: per-key top-k rewrite runs in the verified path, so
-    // its output is hash-checked against the window-formulation oracle
-    org.apache.spark.sql.graft.RowNumberTopKRewrite.install(spark)
+    // the engine extensions (per-key top-k rewrite, as-of join) run in the
+    // verified path, so their output is hash-checked against the oracle
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     val digests = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries

@@ -196,7 +196,7 @@ class TwsTrailProcessor(trailN: Int)
     // Batch the MapState traffic (round 13, guide §4.5 applied to the state
     // store): the original fold did containsKey + getValue + updateValue per
     // ROW — three store round-trips (RocksDB JNI + encoder each) times 50k
-    // rows/batch dominated this operator's micro-batch (ProfileJobs: addBatch
+    // rows/batch dominated this operator's micro-batch (Inspect jobs: addBatch
     // 2.5 s of a 2.8 s trigger). Read each type's count once at first touch,
     // accumulate in a local map, write once per type after the fold. Per-row
     // ranks and the final MapState content are identical; the map's TTL is

@@ -162,7 +162,8 @@ object AsOfStrategy extends SparkStrategy {
   * `AsOfJoin(left, right, leftOn, rightOn, leftTime, rightTime)` →
   * left-outer backward as-of DataFrame (all left columns + nullable right
   * columns). Time is a SEQUENCE so callers can pass (ts, unique_id) and get
-  * a total, deterministic carry order.
+  * a total, deterministic carry order. Plans in a session that has
+  * [[RowNumberTopKRewrite.install]] (every `graft.GraftSession`).
   */
 object AsOfJoin {
   def apply(left: DataFrame, right: DataFrame,
@@ -170,12 +171,7 @@ object AsOfJoin {
       leftTime: Seq[Column], rightTime: Seq[Column],
       matchNullKeys: Boolean = true,
       forward: Boolean = false): DataFrame = {
-    val spark = left.sparkSession
-    if (!spark.sessionState.experimentalMethods.extraStrategies.contains(AsOfStrategy)) {
-      spark.sessionState.experimentalMethods.extraStrategies =
-        AsOfStrategy +: spark.sessionState.experimentalMethods.extraStrategies
-    }
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val classic = left.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     def resolver(plan: LogicalPlan): Column => Expression = c =>
       ClassicDataset.ofRows(classic, plan).select(c)
         .queryExecution.analyzed.expressions.head match {

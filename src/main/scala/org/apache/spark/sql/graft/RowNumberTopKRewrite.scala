@@ -78,14 +78,17 @@ object RowNumberTopKRewrite extends Rule[LogicalPlan] {
     case other => other
   }
 
-  /** Install the rule + strategy into a session (idempotent). */
+  /** Install the engine extensions into a session (idempotent): this rule
+    * plus the TopKPerKey and AsOfJoin strategies. The rule runs in the
+    * "User Provided Optimizers" batch, after the main optimizer batches
+    * the matching above relies on. */
   def install(spark: SparkSession): Unit = {
     val em = spark.sessionState.experimentalMethods
     if (!em.extraOptimizations.contains(RowNumberTopKRewrite)) {
       em.extraOptimizations = RowNumberTopKRewrite +: em.extraOptimizations
     }
-    if (!em.extraStrategies.contains(TopKStrategy)) {
-      em.extraStrategies = TopKStrategy +: em.extraStrategies
+    Seq(TopKStrategy, AsOfStrategy).foreach { s =>
+      if (!em.extraStrategies.contains(s)) em.extraStrategies = s +: em.extraStrategies
     }
   }
 }

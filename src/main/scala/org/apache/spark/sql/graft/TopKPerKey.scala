@@ -127,14 +127,12 @@ object TopKStrategy extends SparkStrategy {
   }
 }
 
-/** Public surface: `TopKPerKey(df, keys, orderBy, k)` → DataFrame. */
+/** Public surface: `TopKPerKey(df, keys, orderBy, k)` → DataFrame. Plans
+  * in a session that has [[RowNumberTopKRewrite.install]] (every
+  * `graft.GraftSession`). */
 object TopKPerKey {
   def apply(df: DataFrame, keys: Seq[Column], orderBy: Seq[Column], k: Int): DataFrame = {
     val spark = df.sparkSession
-    if (!spark.sessionState.experimentalMethods.extraStrategies.contains(TopKStrategy)) {
-      spark.sessionState.experimentalMethods.extraStrategies =
-        TopKStrategy +: spark.sessionState.experimentalMethods.extraStrategies
-    }
     val analyzed = df.queryExecution.analyzed
     val resolve = (c: Column) => {
       val e = ClassicDataset.ofRows(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], analyzed)

@@ -19,8 +19,30 @@ class CacheHygieneSpec extends SparkSpec {
 
   test("only documented pinners leave persistent RDDs; clearCache reclaims all") {
     val unexpected = scala.collection.mutable.ListBuffer.empty[String]
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    // no query may .cache() an already-cached subtree within one run:
+    // CacheManager's "already cached" warning must stay silent, which is
+    // what lets Bench mute that logger. A log4j appender on the root logger
+    // attributes each warning to the query that ran when it fired.
+    val doubleCaches = new java.util.concurrent.atomic.AtomicInteger(0)
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "graft-cache-hygiene", null, null, false,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage.contains("already cached"))
+          doubleCaches.incrementAndGet()
+    }
+    appender.start()
+    val ctx = org.apache.logging.log4j.LogManager.getContext(false).asInstanceOf[LoggerContext]
+    ctx.getConfiguration.getRootLogger.addAppender(appender,
+      org.apache.logging.log4j.Level.WARN, null)
+    ctx.updateLoggers()
+    val doubleCachers = scala.collection.mutable.ListBuffer.empty[String]
+    spark.catalog.clearCache() // nothing cached by earlier suites counts here
+    try SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+      val before = doubleCaches.get()
       fn(spark, sf001).write.format("noop").mode("overwrite").save()
+      if (doubleCaches.get() > before) doubleCachers += name
       val pinned = spark.sparkContext.getPersistentRDDs.nonEmpty
       // one-directional on purpose: the allowlist is MAY-pin, not
       // must-pin — a cached subtree only registers once an action
@@ -31,9 +53,15 @@ class CacheHygieneSpec extends SparkSpec {
       spark.catalog.clearCache()
       assert(spark.sparkContext.getPersistentRDDs.isEmpty,
         s"clearCache left RDDs pinned after $name")
+    } finally {
+      ctx.getConfiguration.getRootLogger.removeAppender(appender.getName)
+      ctx.updateLoggers()
+      appender.stop()
     }
     assert(unexpected.isEmpty,
       s"undocumented cache pins: ${unexpected.mkString(", ")}")
+    assert(doubleCachers.isEmpty,
+      s"queries that cache already-cached data: ${doubleCachers.mkString(", ")}")
   }
 }
 

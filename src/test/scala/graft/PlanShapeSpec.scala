@@ -37,24 +37,45 @@ class PlanShapeSpec extends SparkSpec {
       assert(l.contains("Cross") && l.contains("BuildRight"), l))
   }
 
+  test("the shared session carries the engine GraftSession builds") {
+    val em = spark.sessionState.experimentalMethods
+    assert(em.extraOptimizations.contains(org.apache.spark.sql.graft.RowNumberTopKRewrite))
+    assert(em.extraStrategies.contains(org.apache.spark.sql.graft.TopKStrategy))
+    assert(em.extraStrategies.contains(org.apache.spark.sql.graft.AsOfStrategy))
+    assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
+    assert(spark.conf.get("spark.sql.parquet.outputTimestampType") === "TIMESTAMP_MICROS")
+  }
+
+  test("GraftSession is the only place under src/ that builds a session " +
+      "or installs the engine extensions") {
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    def filesMatching(re: String) = files.filter(f =>
+      re.r.findFirstIn(java.nio.file.Files.readString(f)).nonEmpty)
+      .map(_.getFileName.toString).sorted
+    assert(filesMatching("SparkSession\\.builder") === Seq("GraftSession.scala"))
+    assert(filesMatching("RowNumberTopKRewrite\\.install\\(") === Seq("GraftSession.scala"))
+  }
+
   test("kmv_distinct k-smallest is heap-bounded BEFORE the shuffle") {
-    // the bound must hold whichever mechanism planned it: the TopKPerKey
-    // rewrite (Aggregate idiom; fires when an earlier suite installed it on
-    // the shared session) or Spark's own Partial WindowGroupLimit — either
-    // way the shuffle carries at most k rows per group per input partition
+    // the aggregate-over-rank idiom rewritten into the bounded-heap
+    // TopKPerKey: the shuffle carries at most k rows per group per input
+    // partition
     val p = plan("kmv_distinct")
-    assert(p.contains("TopKPerKey") ||
-      (p.contains("WindowGroupLimit") && p.contains("Partial")), p)
+    assert(p.contains("TopKPerKey"), p)
   }
 
   test("TopKPerKey rewrite covers the aggregate-over-rank idiom when installed") {
-    // isolated session: installing into the shared session would make the
-    // other suites' plan assertions depend on suite execution order
-    val isolated = spark.newSession()
-    org.apache.spark.sql.graft.RowNumberTopKRewrite.install(isolated)
-    val p = SparkEntry.queries("kmv_distinct")(isolated, sf001)
-      .queryExecution.executedPlan.toString
-    assert(p.contains("TopKPerKey"))
+    // a fresh session from newSession() has its own experimental methods, so
+    // it plans without the engine extensions: the operator appears exactly
+    // where GraftSession installed the rewrite
+    def kmvPlan(s: org.apache.spark.sql.SparkSession) =
+      SparkEntry.queries("kmv_distinct")(s, sf001).queryExecution.executedPlan.toString
+    assert(kmvPlan(spark).contains("TopKPerKey"))
+    val bare = spark.newSession()
+    assert(bare.sessionState.experimentalMethods.extraOptimizations.isEmpty)
+    assert(!kmvPlan(bare).contains("TopKPerKey"))
   }
 
   test("no query in the catalog plans an unpartitioned WindowExec over an " +
