@@ -85,7 +85,7 @@ object Inspect {
   private def jobs(spark: SparkSession, sfDir: String, names: Seq[String], n: Int): Unit = {
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     @volatile var enabled = false
-    spark.streams.addListener(new org.apache.spark.sql.streaming.StreamingQueryListener {
+    val batchLines = new org.apache.spark.sql.streaming.StreamingQueryListener {
       import org.apache.spark.sql.streaming.StreamingQueryListener._
       override def onQueryStarted(e: QueryStartedEvent): Unit = ()
       override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
@@ -99,8 +99,8 @@ object Inspect {
           .mkString(" ")
         println(s"[batch] ${p.name} #${p.batchId} rows=${p.numInputRows} $dur | $st")
       }
-    })
-    spark.sparkContext.addSparkListener(new SparkListener {
+    }
+    val jobLines = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = if (enabled) {
         val desc = Option(js.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
@@ -112,8 +112,10 @@ object Inspect {
           if (ms >= 20) println(f"[job] ${je.jobId}%4d ${ms / 1000}%7.3f s  $desc")
         }
       }
-    })
-    for (name <- names; i <- 1 to n) {
+    }
+    spark.streams.addListener(batchLines)
+    spark.sparkContext.addSparkListener(jobLines)
+    try for (name <- names; i <- 1 to n) {
       spark.catalog.clearCache()
       enabled = i == n // job detail on the last (warm) run only
       val t0 = System.nanoTime()
@@ -128,6 +130,9 @@ object Inspect {
       println(f"[profile] $name run $i: ${(t3 - t0) / 1e9}%.2f s " +
         f"(fn ${(t1 - t0) / 1e9}%.2f, plan ${(t2 - t1) / 1e9}%.2f, " +
         f"exec ${(t3 - t2) / 1e9}%.2f)")
+    } finally {
+      spark.streams.removeListener(batchLines)
+      spark.sparkContext.removeSparkListener(jobLines)
     }
   }
 }

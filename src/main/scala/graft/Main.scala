@@ -84,7 +84,8 @@ object Main {
         StreamJobs.summaryPipeline(stream, inputTopics, outputTopic,
           topicSink, kvSink, Trigger.AvailableNow(), checkpoint)
       case "per-record" =>
-        StreamJobs.perRecordPipeline(stream, kvSink, Trigger.AvailableNow())
+        StreamJobs.perRecordPipeline(stream, kvSink, Trigger.AvailableNow(),
+          checkpoint)
       case other =>
         sys.error(s"unknown --mode '$other' (summary | per-record)")
     }

@@ -219,19 +219,16 @@ class TwsTrailProcessor(trailN: Int)
 }
 
 /** Append-only "topic table" modeling a Kafka producer sink
-  * (KafkaProducer.scala:8-11): parquet rows (topic, key, value, ts). */
+  * (KafkaProducer.scala:8-11): parquet rows (topic, key, value, ts), written
+  * fork-free on `file:` through [[NioLocalFileSystem]]. */
 final class TopicTableSink(path: String) extends Serializable {
-  def append(df: DataFrame): Unit =
-    df.write.mode("append").parquet(path)
   /** Idempotent per-batch write: the batch's rows land in their own
     * `batch=<id>` subdir with overwrite semantics, so a checkpoint replay
     * of the same micro-batch rewrites the same files instead of appending
-    * duplicates. Use from foreachBatch sinks that claim exactly-once.
-    * (Don't mix with `append` on one path: read() discovers `batch` as a
-    * partition column only when every file lives under a batch= dir.)
-    */
+    * duplicates; read() shows `batch` as a partition column. */
   def appendBatch(df: DataFrame, batchId: Long): Unit =
-    df.write.mode("overwrite").parquet(s"$path/batch=$batchId")
+    df.write.options(NioLocalFileSystem.options).mode("overwrite")
+      .parquet(s"$path/batch=$batchId")
   def read(spark: SparkSession): DataFrame = spark.read.parquet(path)
 }
 
@@ -261,9 +258,19 @@ final class TopicTableSink(path: String) extends Serializable {
   * micro-batch is O(touched buckets), not O(table) — the same shape as a
   * Delta/Hudi MERGE or an HBase regionserver write path; untouched buckets'
   * files are never rewritten (asserted in StreamJobsSpec).
+  *
+  * Every write, and the sink's own FileSystem handle, goes through
+  * [[NioLocalFileSystem]] for `file:` paths, so a micro-batch starts no
+  * child process; other schemes are untouched.
   */
 final class KvUpsertSink(path: String, numBuckets: Int = 16) extends Serializable {
   import org.apache.hadoop.fs.{FileSystem, Path}
+  import org.apache.spark.sql.types.StructType
+  import scala.jdk.CollectionConverters._
+
+  private def fileSystem(spark: SparkSession, base: Path): FileSystem =
+    FileSystem.get(base.toUri,
+      NioLocalFileSystem.conf(spark.sparkContext.hadoopConfiguration))
 
   private def withBucket(df: DataFrame): DataFrame =
     df.withColumn("bucket", pmod(xxhash64(col("rowkey")), lit(numBuckets)).cast("int"))
@@ -291,10 +298,45 @@ final class KvUpsertSink(path: String, numBuckets: Int = 16) extends Serializabl
         } else fs.delete(st.getPath, true)
       }
 
+  /** Column names of one data file of the live table, read from its
+    * parquet footer on the driver (no Spark job); None if it has none. */
+  private def fileColumns(fs: FileSystem, base: Path): Option[Seq[String]] = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    def visible(p: Path) = !p.getName.startsWith("_") && !p.getName.startsWith(".")
+    fs.listStatus(base).iterator.filter(d => d.isDirectory && visible(d.getPath))
+      .flatMap(d => fs.listStatus(d.getPath).iterator)
+      .find(f => f.isFile && visible(f.getPath) && f.getPath.getName.endsWith(".parquet"))
+      .map { f =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, fs.getConf))
+        try r.getFooter.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSeq
+        finally r.close()
+      }
+  }
+
+  /** The live table read with the batch's schema, not parquet schema
+    * inference (one Spark job per upsert). A batch whose columns differ from
+    * the table's throws: the merge would otherwise rewrite the touched
+    * buckets from the batch alone and lose their cells. A table written
+    * before the MERGE extension has no `op` column; `withOp` supplies it. */
+  private def live(spark: SparkSession, fs: FileSystem, base: Path,
+      schema: StructType): DataFrame = {
+    val want = schema.fieldNames.filterNot(_ == "bucket").toSet
+    val onDisk = fileColumns(fs, base).map(_.toSet)
+    onDisk.foreach { cols =>
+      if (cols + "op" != want)
+        throw new IllegalArgumentException(s"KvUpsertSink: batch columns " +
+          s"${want.toSeq.sorted.mkString(", ")} differ from table $path columns " +
+          s"${cols.toSeq.sorted.mkString(", ")}")
+    }
+    val read = StructType(schema.filter(f => f.name == "bucket" || onDisk.forall(_(f.name)))
+      .map(_.copy(nullable = true)))
+    withOp(spark.read.schema(read).parquet(path))
+  }
+
   def upsert(spark: SparkSession, batch: DataFrame): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
     val base = new Path(path)
-    val fs = FileSystem.get(base.toUri, hconf)
+    val fs = fileSystem(spark, base)
     recoverAsides(fs, base)
 
     val b = withBucket(withOp(batch)).cache()
@@ -303,16 +345,12 @@ final class KvUpsertSink(path: String, numBuckets: Int = 16) extends Serializabl
       val touched = b.select(col("bucket")).distinct()
         .collect().map(_.getInt(0)).sorted
       if (touched.isEmpty) return
-      val existing =
-        if (fs.exists(base))
-          Some(withOp(spark.read.parquet(path))
-            .filter(col("bucket").isin(touched.map(Integer.valueOf): _*)))
-        else None // first write: the sink creates the table (O7 DDL-on-write)
-      val all = existing match {
-        case Some(e) if e.columns.sorted.sameElements(b.columns.sorted) =>
-          e.select(b.columns.map(col): _*).unionAll(b)
-        case _ => b
-      }
+      // first write: the sink creates the table (O7 DDL-on-write)
+      val all =
+        if (!fs.exists(base)) b
+        else live(spark, fs, base, b.schema)
+          .filter(col("bucket").isin(touched.map(Integer.valueOf): _*))
+          .select(b.columns.map(col): _*).unionAll(b)
       // latest op per cell; ts tie: 'delete' < 'upsert' so op ASC lets the
       // delete win (a MERGE's delete branch dominates same-instant updates)
       val w = Window.partitionBy(col("rowkey"), col("cf"), col("qualifier"))
@@ -339,7 +377,8 @@ final class KvUpsertSink(path: String, numBuckets: Int = 16) extends Serializabl
       rows: DataFrame, touched: Array[Int]): Unit = {
     val staging = new Path(base.toString + "_staging")
     fs.delete(staging, true)
-    rows.write.partitionBy("bucket").mode("overwrite").parquet(staging.toString)
+    rows.write.options(NioLocalFileSystem.options).partitionBy("bucket")
+      .mode("overwrite").parquet(staging.toString)
     fs.mkdirs(base)
     touched.foreach { k =>
       val src = new Path(staging, s"bucket=$k")
@@ -373,9 +412,8 @@ final class KvUpsertSink(path: String, numBuckets: Int = 16) extends Serializabl
     * correct. Pass the stream's watermark (event-time), not wall clock.
     */
   def compact(spark: SparkSession, watermark: java.sql.Timestamp): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
     val base = new Path(path)
-    val fs = FileSystem.get(base.toUri, hconf)
+    val fs = fileSystem(spark, base)
     recoverAsides(fs, base)
     if (!fs.exists(base)) return
     val all = withOp(spark.read.parquet(path))
@@ -400,8 +438,7 @@ final class KvUpsertSink(path: String, numBuckets: Int = 16) extends Serializabl
     */
   def read(spark: SparkSession): DataFrame = {
     val base = new Path(path)
-    recoverAsides(
-      FileSystem.get(base.toUri, spark.sparkContext.hadoopConfiguration), base)
+    recoverAsides(fileSystem(spark, base), base)
     withOp(spark.read.parquet(path))
       .filter(col("op") =!= "delete").drop("bucket", "op")
   }
@@ -418,7 +455,14 @@ object StreamJobs {
   /** ≈ Streamer.main (Streamer.scala:120-202): per micro-batch, compute the
     * record count and distinct messages, emit one formatted summary line to
     * the topic table, upsert the summary cell, and bulk-write distinct
-    * messages. batchId replaces the driver-side counter (exactly-once).
+    * messages. batchId replaces the driver-side counter (exactly-once: the
+    * topic line goes through the idempotent `appendBatch`, and the KV upsert
+    * is idempotent, so a batch re-run after a crash rewrites, not repeats).
+    *
+    * One pass over the batch's records: a per-key aggregate (record count,
+    * max event time, max bulk cell value) is the only thing cached, O(distinct
+    * keys), not O(batch). The count, the batch time and the bulk cells all
+    * come from it.
     */
   def summaryPipeline(
       input: DataFrame,
@@ -435,12 +479,28 @@ object StreamJobs {
     base
       .foreachBatch { (df: DataFrame, batchId: Long) =>
         val spark = df.sparkSession
-        val cached = df.cache()
+        // Bulk cells: rowkey = epochSec-key (O6 intent), one per distinct
+        // (key, value) in the reference. Every bulk cell of a rowkey carries
+        // the same ts (the batch time) and op, so the sink's last-write-wins
+        // merge keeps max(cell_value) per rowkey; reducing to max per key
+        // first (finer than per rowkey: a null key and the literal key
+        // "null" share `<sec>-null` and still meet in the sink) is the same
+        // associative fold, and leaves the KV table identical to writing
+        // every distinct message.
+        val perKey = df.groupBy(col("key")).agg(
+          count(lit(1)).as("n"),
+          max(col("timestamp")).as("max_ts"),
+          max(when(col("key").isNull, lit("kafka empty message"))
+            .otherwise(concat(col("key"), lit("--|--"), col("value"))))
+            .as("cell_value"))
+          .cache()
         try {
-          val n = cached.count()
-          // deterministic batch time = max event time (reference used wall clock)
-          val batchTs = cached.agg(max(col("timestamp"))).head().getTimestamp(0)
+          val stats = perKey.agg(sum(col("n")), max(col("max_ts"))).head()
+          // deterministic batch time = max event time (reference used wall
+          // clock); an empty batch has none and writes nothing
+          val batchTs = stats.getTimestamp(1)
           if (batchTs != null) {
+            val n = stats.getLong(0)
             // floorDiv, not /: Java integer division truncates toward zero,
             // which disagrees with unix_timestamp/epoch-floor for pre-1970
             // timestamps (hostile fixtures carry them)
@@ -450,44 +510,31 @@ object StreamJobs {
             val summary = s"Spark - date:${fmt.format(batchTs)} from topic: " +
               s"$topics - number of RDD (batches): ${batchId + 1} - number of message $n"
             import spark.implicits._
-            topicSink.append(
+            topicSink.appendBatch(
               Seq((outTopic, null: String, summary, batchTs))
-                .toDF("topic", "key", "value", "ts"))
-            // bulk table: distinct messages, rowkey = epochSec-key (O6 intent).
-            // Cell ts is the BATCH time, not the surviving row's event time:
-            // dropDuplicates keeps an arbitrary physical row, so a per-row ts
-            // would make the sink's LWW survivor for a colliding rowkey
-            // (one key, several values) task-order dependent; stamping the
-            // batch time pushes ties to the sink's cell_value tiebreak —
-            // deterministic, and what the reference effectively did (puts
-            // stamped at write time ≈ batch wall clock).
+                .toDF("topic", "key", "value", "ts"), batchId)
+            // Cell ts is the BATCH time, as the reference's puts effectively
+            // carried (stamped at write time ≈ batch wall clock), so cells of
+            // one rowkey tie on ts and the sink's cell_value tiebreak decides:
+            // deterministic, whatever the task order.
             //
-            // ONE upsert per batch, not two (round 13, guide §2.4/§6): the
-            // summary cell and the bulk cells used to go through separate
-            // upsert() calls, i.e. two full read-merge-write cycles of the
-            // bucketed table per micro-batch. The sink's LWW merge is a fold
-            // over a total order (ts DESC, op ASC, cell_value DESC) — a
-            // commutative/associative/idempotent max per cell — so
-            // upsert(A); upsert(B) ≡ upsert(A ∪ B) exactly; rowkey spaces
-            // are disjoint anyway ("<sec>" vs "<sec>-<key>"). Halves the
-            // table-merge jobs per batch; driver-verified hash-identical.
+            // ONE upsert per batch: the sink's LWW merge is a fold over a
+            // total order (ts DESC, op ASC, cell_value DESC), so
+            // upsert(A); upsert(B) ≡ upsert(A ∪ B); the summary rowkey
+            // "<sec>" and the bulk rowkeys "<sec>-<key>" are disjoint anyway.
             val summaryCell =
               Seq((epochSec.toString, "cf1", "messages", summary, batchTs))
                 .toDF("rowkey", "cf", "qualifier", "cell_value", "ts")
             kvSink.upsert(spark,
-              summaryCell.unionAll(cached
-                .dropDuplicates("key", "value")
-                .select(
-                  concat(lit(epochSec.toString), lit("-"), coalesce(col("key"), lit("null")))
-                    .as("rowkey"),
-                  lit("cf1").as("cf"),
-                  lit("content").as("qualifier"),
-                  when(col("key").isNull, lit("kafka empty message"))
-                    .otherwise(concat(col("key"), lit("--|--"), col("value")))
-                    .as("cell_value"),
-                  lit(batchTs).as("ts"))))
+              summaryCell.unionAll(perKey.select(
+                concat(lit(epochSec.toString), lit("-"), coalesce(col("key"), lit("null")))
+                  .as("rowkey"),
+                lit("cf1").as("cf"),
+                lit("content").as("qualifier"),
+                col("cell_value"),
+                lit(batchTs).as("ts"))))
           }
-        } finally cached.unpersist()
+        } finally perKey.unpersist()
         ()
       }
       .start()

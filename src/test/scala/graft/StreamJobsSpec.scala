@@ -654,6 +654,178 @@ class StreamJobsSpec extends SparkSpec {
     assert(live() === Set("c" -> "vc"))
   }
 
+  test("summaryPipeline topic line is exactly-once when a batch re-runs " +
+      "after a crash before its commit") {
+    val in = MemoryStream[KafkaShaped]
+    val dir = tmp()
+    val topicSink = new TopicTableSink(dir + "/topic")
+    val kvSink = new KvUpsertSink(dir + "/kv")
+    val ckpt = dir + "/ckpt"
+    def start() = StreamJobs.summaryPipeline(in.toDF(), "t", "out",
+      topicSink, kvSink, Trigger.ProcessingTime(0), Some(ckpt))
+    def lines() = topicSink.read(spark).select($"value").as[String]
+      .collect().sorted.toSeq
+    val q1 = start()
+    in.addData(rec("a", "1", 2000, 0))
+    q1.processAllAvailable()
+    in.addData(rec("b", "2", 3000, 1), rec("b", "3", 3001, 2))
+    q1.processAllAvailable()
+    graft.streaming.StreamQuiet.quietStop(q1)
+    val before = lines()
+    assert(before.size === 2, before.toString)
+
+    // the crash: batch 1 reached both sinks, its commit never landed
+    Seq("1", ".1.crc").map(f => new java.io.File(s"$ckpt/commits/$f"))
+      .filter(_.exists()).foreach(f => assert(f.delete()))
+    val q2 = start() // re-runs batch 1 from the offset log
+    q2.processAllAvailable()
+    graft.streaming.StreamQuiet.quietStop(q2)
+
+    assert(new java.io.File(s"$ckpt/commits/1").exists(), "batch 1 did not re-run")
+    // one line per batch, and the re-run line is the one first written
+    assert(lines() === before)
+    assert(kvSink.read(spark).filter($"qualifier" === "messages").count() === 2)
+  }
+
+  test("summaryPipeline's per-key pass writes the KV table the distinct-" +
+      "message formulation writes (dropDuplicates + last-write-wins)") {
+    val recs = Seq(
+      rec("a", "1", 1000, 0), rec("a", "1", 1000, 1),   // duplicate pair
+      rec("a", "2", 1001, 2), rec("a", "10", 1001, 3),  // several values, one key
+      rec(null, "x", 1002, 4), rec("null", "y", 1002, 5), // both on <sec>-null
+      rec("b", null, 1002, 6), rec("b", "3", 1002, 7),  // null value beside a value
+      rec("c", null, 1002, 8))                          // only a null value
+    val in = MemoryStream[KafkaShaped]
+    val kvSink = new KvUpsertSink(tmp() + "/kv")
+    in.addData(recs: _*)
+    val q = StreamJobs.summaryPipeline(in.toDF(), "t", "out",
+      new TopicTableSink(tmp() + "/topic"), kvSink, Trigger.AvailableNow())
+    q.processAllAvailable(); graft.streaming.StreamQuiet.quietStop(q)
+
+    // the earlier formulation: every distinct (key, value) as a bulk cell at
+    // the batch time, reduced by the sink's rule (ts DESC, op ASC,
+    // cell_value DESC; all ts and op are equal here)
+    val df = recs.toDF()
+    val batchTs = df.agg(max($"timestamp")).head().getTimestamp(0)
+    val sec = Math.floorDiv(batchTs.getTime, 1000L).toString
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy($"rowkey", $"cf", $"qualifier").orderBy($"cell_value".desc)
+    val expected = df.dropDuplicates("key", "value")
+      .select(
+        concat(lit(sec), lit("-"), coalesce($"key", lit("null"))).as("rowkey"),
+        lit("cf1").as("cf"), lit("content").as("qualifier"),
+        when($"key".isNull, lit("kafka empty message"))
+          .otherwise(concat($"key", lit("--|--"), $"value")).as("cell_value"))
+      .withColumn("rn", row_number().over(w)).filter($"rn" === 1).drop("rn")
+      .as[(String, String, String, String)].collect().toSet
+    assert(expected === Set(
+      (s"$sec-a", "cf1", "content", "a--|--2"),
+      (s"$sec-null", "cf1", "content", "null--|--y"),
+      (s"$sec-b", "cf1", "content", "b--|--3"),
+      (s"$sec-c", "cf1", "content", null)))
+    val kv = kvSink.read(spark)
+    assert(kv.filter($"qualifier" === "content")
+      .select($"rowkey", $"cf", $"qualifier", $"cell_value")
+      .as[(String, String, String, String)].collect().toSet === expected)
+    assert(kv.filter($"qualifier" === "messages").select($"cell_value")
+      .as[String].head().endsWith("number of message 9"))
+  }
+
+  test("KvUpsertSink.upsert throws on a column mismatch and leaves the " +
+      "table unchanged; a table without `op` still merges") {
+    val cols = Seq("rowkey", "cf", "qualifier", "cell_value", "ts")
+    def cell(k: String, v: String, sec: Long) =
+      (k, "cf1", "q", v, new Timestamp(sec * 1000))
+    val path = tmp() + "/kv"
+    val sink = new KvUpsertSink(path, numBuckets = 4)
+    sink.upsert(spark, Seq(cell("k1", "v1", 100), cell("k2", "v2", 100))
+      .toDF(cols: _*))
+    def files() = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
+      .toArray.map(_.asInstanceOf[java.nio.file.Path].toFile)
+      .map(f => (f.getPath, f.length, f.lastModified)).toSet
+    def live() = sink.read(spark).as[(String, String, String, String, Timestamp)]
+      .collect().toSet
+    val (filesBefore, liveBefore) = (files(), live())
+    val e = intercept[IllegalArgumentException](sink.upsert(spark,
+      Seq(cell("k1", "v9", 200)).toDF(cols: _*).withColumn("extra", lit(1))))
+    assert(e.getMessage.contains("extra"), e.getMessage)
+    assert(files() === filesBefore)
+    assert(live() === liveBefore)
+
+    // a table written before the MERGE extension has no `op` column: an
+    // older upsert must still lose to its cell, not replace the bucket
+    val old = tmp() + "/kv_old"
+    Seq(cell("k1", "v1", 100)).toDF(cols: _*)
+      .withColumn("bucket", pmod(xxhash64($"rowkey"), lit(4)).cast("int"))
+      .write.partitionBy("bucket").parquet(old)
+    val oldSink = new KvUpsertSink(old, numBuckets = 4)
+    oldSink.upsert(spark, Seq(cell("k1", "v0", 50)).toDF(cols: _*))
+    assert(oldSink.read(spark).select($"cell_value").as[String].collect().toSeq
+      === Seq("v1"))
+  }
+
+  test("sink writes start no child process; NioLocalFileSystem sets the " +
+      "requested POSIX bits") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.hadoop.fs.Path
+    import org.apache.hadoop.fs.permission.FsPermission
+    val dir = tmp()
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val flushes = new java.util.concurrent.atomic.AtomicInteger()
+    val rs = new jdk.jfr.consumer.RecordingStream()
+    // every event recorded before the call has been delivered after two more
+    // flushes (one a second)
+    def drain(): Unit = {
+      val target = flushes.get + 2
+      val deadline = System.nanoTime() + 20000000000L
+      while (flushes.get < target && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(flushes.get >= target, "the JFR stream stopped flushing")
+    }
+    try {
+      rs.enable("jdk.ProcessStart")
+      rs.onEvent("jdk.ProcessStart", e => started.add(e.getString("command")))
+      rs.onFlush(() => flushes.incrementAndGet())
+      rs.startAsync()
+      // control: the stream sees a process start
+      new ProcessBuilder("true").start().waitFor()
+      drain()
+      assert(started.asScala.exists(_.contains("true")), started.toString)
+      started.clear()
+
+      val topic = new TopicTableSink(dir + "/topic")
+      val line = Seq(("out", null: String, "line", new Timestamp(1000L)))
+        .toDF("topic", "key", "value", "ts")
+      topic.appendBatch(line, 0)
+      topic.appendBatch(line, 0) // a re-run batch overwrites its directory
+      val kv = new KvUpsertSink(dir + "/kv", numBuckets = 4)
+      val cols = Seq("rowkey", "cf", "qualifier", "cell_value", "ts")
+      kv.upsert(spark, (1 to 8).map(i => (s"k$i", "cf1", "q", s"v$i",
+        new Timestamp(1000L))).toDF(cols: _*))
+      kv.upsert(spark, Seq(("k1", "cf1", "q", "v1b", new Timestamp(2000L)))
+        .toDF(cols: _*)) // reads the live table and swaps a bucket
+      drain()
+      assert(started.isEmpty, started.asScala.mkString("\n"))
+      assert(topic.read(spark).count() === 1)
+      assert(kv.read(spark).count() === 8)
+    } finally rs.close()
+
+    val fs = new NioLocalFileSystem
+    fs.initialize(java.net.URI.create("file:///"),
+      new org.apache.hadoop.conf.Configuration())
+    def mode(p: Path) = java.nio.file.attribute.PosixFilePermissions.toString(
+      java.nio.file.Files.getPosixFilePermissions(
+        java.nio.file.Paths.get(p.toUri.getPath)))
+    val d = new Path(dir, "d750")
+    assert(fs.mkdirs(d, new FsPermission("750")))
+    assert(mode(d) === "rwxr-x---")
+    val f = new Path(d, "f640")
+    fs.create(f, new FsPermission("640"), false, 4096, 1.toShort, 1L << 20, null)
+      .close()
+    assert(mode(f) === "rw-r-----")
+    fs.setPermission(f, new FsPermission("604"))
+    assert(mode(f) === "rw----r--")
+  }
+
   test("dropDuplicatesWithinWatermark evicts state past the watermark") {
     val in = MemoryStream[KafkaShaped]
     val q = StreamJobs.streamingDedupWithinWatermark(in.toDF(), "30 seconds")
