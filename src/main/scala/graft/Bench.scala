@@ -142,7 +142,8 @@ object Bench {
     val engine =
       s"""{"cpus":${spark.sparkContext.defaultParallelism},""" +
       s""""shuffle_partitions":${spark.conf.get("spark.sql.shuffle.partitions")},""" +
-      s""""max_heap_mb":${Runtime.getRuntime.maxMemory >> 20},"spark":"${spark.version}"}"""
+      s""""max_heap_mb":${Runtime.getRuntime.maxMemory >> 20},"spark":"${spark.version}",""" +
+      s""""git_sha":"${gitSha(java.nio.file.Paths.get(".git"))}"}"""
     val meta =
       s""""canary_floor_sec":${math.rint(canaryFloor * 1e4) / 1e4},""" +
       s""""stall_retries":$retried,"remeasured":$remeasJson,""" +
@@ -181,5 +182,32 @@ object Bench {
     }
     println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${remeasured.size},"n_failed":${failed.size},"queries":{$topEntries},"sf":"$sfDir"}""")
     spark.stop()
+  }
+
+  /** The commit checked out in the repository whose git dir is `git`, read
+    * from `HEAD` and the ref it names (a loose ref file, else
+    * `packed-refs`) without starting a process; "unknown" when there is no
+    * such checkout or the ref cannot be resolved. */
+  private[graft] def gitSha(git: java.nio.file.Path): String = {
+    import java.nio.file.Files
+    val sha = "[0-9a-f]{40,64}"
+    try {
+      val head = Files.readString(git.resolve("HEAD")).trim
+      val resolved =
+        if (!head.startsWith("ref: ")) head
+        else {
+          val ref = head.stripPrefix("ref: ").trim
+          val loose = git.resolve(ref)
+          if (Files.isRegularFile(loose)) Files.readString(loose).trim
+          else {
+            import scala.jdk.CollectionConverters._
+            Files.readAllLines(git.resolve("packed-refs")).asScala
+              .map(_.trim.split(" ")).collectFirst {
+                case Array(s, r) if r == ref => s
+              }.getOrElse("")
+          }
+        }
+      if (resolved.matches(sha)) resolved else "unknown"
+    } catch { case _: java.io.IOException => "unknown" }
   }
 }

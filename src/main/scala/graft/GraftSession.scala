@@ -27,4 +27,19 @@ object GraftSession {
     org.apache.spark.sql.graft.RowNumberTopKRewrite.install(spark)
     spark
   }
+
+  /** Run `body` with each `key -> value` pin set on the session, then put
+    * every key back as it was (its old value, or unset if it had none),
+    * whether `body` returns or throws. A key pinned twice takes its last
+    * value. */
+  private[graft] def withConf[A](spark: SparkSession, pins: (String, String)*)(body: => A): A = {
+    val saved = pins.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      pins.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
 }

@@ -4,7 +4,8 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.{Q, QOps, QueryModule, Tables}
+import org.apache.spark.sql.streaming.StreamingQuery
+import graft.{GraftSession, Q, QOps, QueryModule, Tables}
 
 /** Deterministic REPLAY harness: the StreamJobs pipelines run over the
   * driver's `events` fixture through a `MemoryStream`, flushed to
@@ -24,13 +25,22 @@ import graft.{Q, QOps, QueryModule, Tables}
   *    passes its end, and the watermark only advances between batches, so
   *    the replay appends two far-future sentinel batches (key = -1) to
   *    push the watermark past every real session/window, then filters the
-  *    sentinel back out. (Sentinel 1 advances the watermark past the data;
-  *    sentinel 2 advances it past sentinel 1's own windows so batch 3
-  *    actually runs with the final watermark.)
+  *    sentinel back out ([[flush]]). (Sentinel 1 advances the watermark
+  *    past the data; sentinel 2 advances it past sentinel 1's own windows
+  *    so batch 3 actually runs with the final watermark.)
   *  - Output rows are projected to the columns that are
   *    partitioning-independent (e.g. dedup emits the first-SEEN physical
   *    row per key — which row that is depends on task order — so the
   *    replay selects only the dedup key columns) and totally ordered.
+  *
+  * One scope and one runner: every replay starts its queries inside
+  * [[withReplayConf]] ([[ReplayConf]] plus any per-replay pins, put back
+  * by `GraftSession.withConf`) and inside [[withTempDir]] (a fresh dir on
+  * [[scratchRoot]], deleted after). Both are undone whether the replay
+  * returns or throws, so a query that fails to start leaves neither its
+  * conf nor its checkpoint behind. Replays read back from a memory sink go
+  * through [[runToMemory]]; the ones that start through a StreamJobs
+  * function or restart from a checkpoint use the two scopes directly.
   *
   * Driver-scale note: the fixture collect is bounded (events is 1e4 rows
   * at the verify SF, 1e5 at bench SF) — this is a correctness harness
@@ -55,96 +65,66 @@ object ReplayOps extends QueryModule {
 
   private def ts(ms: Long) = new Timestamp(ms)
 
-  /** Run `body` with `spark.sql.shuffle.partitions` pinned to a small
-    * value, restoring the session setting after. Streaming queries capture
-    * the shuffle-partition count at START as their STATE partitioning:
-    * every micro-batch then commits one state store per partition per
-    * stateful operator — at the sweep default of 32 that is pure fixed
-    * overhead for a bounded replay fixture (the stream-stream join replay
-    * spent 17 s on it at sf0.01), and at production scale the production
-    * session's own setting applies. Correctness is unaffected: state is
-    * hash-partitioned by key at any width. */
-  private def withReplayPartitions[A](spark: SparkSession,
-      noData: Boolean = false)(body: => A): A = {
-    val prev = pinPartitions(spark)
-    if (noData) spark.conf.set(NoDataKey, "true")
-    try body finally restorePartitions(spark, prev)
-  }
-
   private val NoDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
 
-  /** Checkpoint I/O pins for the replay scope (round 12, measured via
-    * thread-sampling a bench replay):
-    *
-    *  - The default FileContext-based checkpoint manager renames every
-    *    finished checkpoint file through Hadoop's AbstractFileSystem, whose
-    *    local-FS rename calls `FileUtil.readLink` — a fork/exec of the
-    *    `readlink` SHELL COMMAND per file. A replay commits hundreds of
-    *    checkpoint files (offset/commit logs + state deltas × partitions ×
-    *    batches), so the fork storm dominated replay wall time on the
-    *    32-core sandbox. The FileSystem-based manager renames via
-    *    `File.renameTo` (atomic on POSIX local filesystems — exactly where
-    *    replays run; a production checkpoint on HDFS/S3 keeps the default).
-    *  - Spark 4.1's checkpoint file-checksum layer writes a second
-    *    `.crc`-style sidecar per checkpoint file through the same rename
-    *    path — doubling the fork count for scratch files that live seconds.
-    *
-    * Both are I/O-manager choices, not semantics: every replay output stays
+  /** The session conf every replay query starts under. Each pin is an
+    * execution choice, not semantics: every replay output stays
     * hash-checked against the batch oracle, and the crash-restart replays
-    * still resume from these checkpoints. */
-  private val CkptMgrKey = "spark.sql.streaming.checkpointFileManagerClass"
-  private val CkptMgrVal = "org.apache.spark.sql.execution.streaming." +
-    "checkpointing.FileSystemBasedCheckpointFileManager"
-  private val CkptSumKey = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-
-  private case class Pinned(parts: String, noData: Option[String],
-      ckptMgr: Option[String], ckptSum: Option[String])
-
-  /** Imperative form of [[withReplayPartitions]] for the replay fns that
-    * interleave stream setup and drive: pin before `.start()`, restore in
-    * the `finally` next to `StreamQuiet.quietStop(q)`.
+    * still resume from these checkpoints.
     *
-    * Also disables NO-DATA micro-batches for the replay: with a
-    * ProcessingTime(0) trigger the engine otherwise runs an extra empty
-    * stateful batch (plan + per-partition state commit) after every
-    * watermark advance — pure fixed overhead here, because every replay
-    * that needs a post-watermark batch feeds a DATA batch (the second
-    * sentinel) to provide it. The one exception is sessionizeReplay: its
-    * ProcessingTimeTimeout only FIRES in no-data batches, so it re-enables
-    * the flag after pinning. Outputs are unchanged either way (the driver
-    * hash-checks this catalog-wide). */
-  private def pinPartitions(spark: SparkSession): Pinned = {
-    val prev = Pinned(spark.conf.get("spark.sql.shuffle.partitions"),
-      spark.conf.getOption(NoDataKey),
-      spark.conf.getOption(CkptMgrKey), spark.conf.getOption(CkptSumKey))
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    spark.conf.set(NoDataKey, "false")
-    spark.conf.set(CkptMgrKey, CkptMgrVal)
-    spark.conf.set(CkptSumKey, "false")
-    prev
-  }
-  private def restorePartitions(spark: SparkSession, prev: Pinned): Unit = {
-    spark.conf.set("spark.sql.shuffle.partitions", prev.parts)
-    def put(key: String, v: Option[String]): Unit = v match {
-      case Some(x) => spark.conf.set(key, x)
-      case None    => spark.conf.unset(key)
-    }
-    put(NoDataKey, prev.noData)
-    put(CkptMgrKey, prev.ckptMgr)
-    put(CkptSumKey, prev.ckptSum)
-  }
+    *  - Shuffle partitions 2. Streaming queries capture the
+    *    shuffle-partition count at START as their STATE partitioning:
+    *    every micro-batch then commits one state store per partition per
+    *    stateful operator — at the sweep default of 32 that is pure fixed
+    *    overhead for a bounded replay fixture (the stream-stream join
+    *    replay spent 17 s on it at sf0.01), and at production scale the
+    *    production session's own setting applies. State is hash-partitioned
+    *    by key at any width.
+    *  - No-data micro-batches off. With a ProcessingTime(0) trigger the
+    *    engine otherwise runs an extra empty stateful batch (plan +
+    *    per-partition state commit) after every watermark advance — pure
+    *    fixed overhead here, because every replay that needs a
+    *    post-watermark batch feeds a DATA batch (the second sentinel) to
+    *    provide it. The two replays that need them pin [[NoData]].
+    *  - The FileSystem-based checkpoint manager (round 12, measured by
+    *    thread-sampling a bench replay). The default FileContext-based
+    *    manager renames every finished checkpoint file through Hadoop's
+    *    AbstractFileSystem, whose local-FS rename calls
+    *    `FileUtil.readLink` — a fork/exec of the `readlink` SHELL COMMAND
+    *    per file. A replay commits hundreds of checkpoint files (offset/
+    *    commit logs + state deltas × partitions × batches), so the fork
+    *    storm dominated replay wall time on the 32-core sandbox. The
+    *    FileSystem-based manager renames via `File.renameTo` (atomic on
+    *    POSIX local filesystems — exactly where replays run; a production
+    *    checkpoint on HDFS/S3 keeps the default).
+    *  - Checkpoint checksums off. Spark 4.1's checkpoint file-checksum
+    *    layer writes a second `.crc`-style sidecar per checkpoint file
+    *    through the same rename path — doubling the fork count for scratch
+    *    files that live seconds. Outside the replay scope it stays on: it
+    *    is there to detect corruption. */
+  private val ReplayConf: Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> "2",
+    NoDataKey -> "false",
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager",
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false")
 
-  /** Recursive delete of a replay temp dir (checkpoint/state-store/sink
-    * litter): repeated Verify/Bench/test sweeps in one environment would
-    * otherwise accumulate unbounded /tmp state. Never throws — cleanup must
-    * not mask the real result or error. */
-  private def rmTree(p: java.nio.file.Path): Unit =
-    try {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(f => java.nio.file.Files.deleteIfExists(f))
-    } catch { case _: Throwable => () }
+  /** Extra pin for the replays whose result depends on no-data batches. */
+  private val NoData = NoDataKey -> "true"
+
+  /** Extra pin: the RocksDB state store provider, the only backend
+    * transformWithState runs on in Spark 4.1. (Round 13 measured RocksDB
+    * changelog-checkpointing and trackTotalNumberOfRows=false pins here:
+    * no win outside noise at replay state sizes — per-batch cost is the
+    * per-row store round-trips inside the processors, fixed in
+    * [[TwsTrailProcessor]], not the commit I/O. Left at defaults.) */
+  private val RocksDb = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Run `body` under [[ReplayConf]] plus `pins` (which win), restoring the
+    * session conf after. */
+  private def withReplayConf[A](spark: SparkSession, pins: (String, String)*)(body: => A): A =
+    GraftSession.withConf(spark, ReplayConf ++ pins: _*)(body)
 
   /** Scratch root for replay checkpoints/state/sinks: tmpfs when the host
     * has one (/dev/shm) — the harness writes hundreds of small fsynced
@@ -179,17 +159,23 @@ object ReplayOps extends QueryModule {
   def scratchRoot: String =
     tmpRoot.map(_.toString).getOrElse(System.getProperty("java.io.tmpdir"))
 
-  /** createTempDirectory on the replay scratch root ([[tmpRoot]]). */
-  private def mkTempDir(prefix: String): java.nio.file.Path =
-    tmpRoot match {
-      case Some(r) => java.nio.file.Files.createTempDirectory(r, prefix)
-      case None    => java.nio.file.Files.createTempDirectory(prefix)
-    }
-
-  /** Create a temp dir for `body`, ALWAYS deleting it after. */
+  /** A fresh dir on [[scratchRoot]] for `body`, ALWAYS deleted after:
+    * repeated Verify/Bench/test sweeps in one environment would otherwise
+    * accumulate unbounded checkpoint/state-store/sink litter. The delete
+    * never throws — cleanup must not mask the real result or error. */
   private def withTempDir[A](prefix: String)(body: String => A): A = {
-    val d = mkTempDir(prefix)
-    try body(d.toString) finally rmTree(d)
+    import java.nio.file.Files
+    val d = tmpRoot match {
+      case Some(r) => Files.createTempDirectory(r, prefix)
+      case None    => Files.createTempDirectory(prefix)
+    }
+    try body(d.toString) finally
+      try {
+        import scala.jdk.CollectionConverters._
+        Files.walk(d).iterator().asScala.toSeq
+          .sortBy(-_.getNameCount)
+          .foreach(f => Files.deleteIfExists(f))
+      } catch { case _: Throwable => () }
   }
 
   /** Eagerly materialize a replay result so its backing sink/temp files can
@@ -205,41 +191,55 @@ object ReplayOps extends QueryModule {
       java.util.Arrays.asList(df.collect(): _*), df.schema)
   }
 
-  /** Feed `batches` through `pipeline`, flush with two sentinel batches,
-    * return the memory-sink table. `mk` builds the pipeline from the
-    * streaming DataFrame (columns key, value, timestamp). */
+  /** The one memory-sink runner: start `out` into a memory table `name`
+    * under the replay conf (plus `pins`) with its checkpoint in a replay
+    * temp dir, hand the query to `feed`, stop it, and return the table.
+    * Re-runs in one session (test + Verify + Bench share sweeps) replace
+    * the previous run's table. */
+  private def runToMemory(spark: SparkSession, name: String, out: DataFrame,
+      mode: String = "append", pins: Seq[(String, String)] = Nil)(
+      feed: StreamingQuery => Unit): DataFrame = {
+    withTempDir(s"graft_$name") { ckpt =>
+      withReplayConf(spark, pins: _*) {
+        spark.catalog.dropTempView(name)
+        val q = out.writeStream.outputMode(mode)
+          .option("checkpointLocation", ckpt)
+          .format("memory").queryName(name).start()
+        try feed(q) finally StreamQuiet.quietStop(q)
+      }
+    }
+    spark.table(name)
+  }
+
+  /** Feed the watermark-flush sentinels to every input in `ins`: for each
+    * of `hours`, one key -1 row that many hours past the latest event in
+    * `data`, then one batch. The default 3 h / 6 h sit far past any real
+    * session (30 min gap) or window (1 h) end. */
+  private def flush(q: StreamingQuery, data: Iterable[Ev], ins: Seq[MemoryStream[Ev]],
+      hours: Seq[Long] = Seq(3L, 6L)): Unit = {
+    lazy val maxMs = data.map(_.timestamp.getTime).max
+    hours.foreach { h =>
+      ins.foreach(_.addData(Ev(-1L, "s", ts(maxMs + h * 3600 * 1000))))
+      q.processAllAvailable()
+    }
+  }
+
+  /** Feed `batches` through `pipeline`, flush with the sentinel batches at
+    * `flushHours` past the data (none to skip), return the memory-sink
+    * table. `mk` builds the pipeline from the streaming DataFrame (columns
+    * key, value, timestamp). */
   private def replay(
       spark: SparkSession,
       batches: Seq[Seq[Ev]],
       sinkName: String,
-      sentinels: Boolean = true,
-      noData: Boolean = false)(mk: DataFrame => DataFrame): DataFrame = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+      flushHours: Seq[Long] = Seq(3L, 6L),
+      pins: Seq[(String, String)] = Nil)(mk: DataFrame => DataFrame): DataFrame = {
     import spark.implicits._
-    withReplayPartitions(spark, noData) {
-      withTempDir(s"graft_replay_$sinkName") { ckpt =>
-        val in = MemoryStream[Ev]
-        val out = mk(in.toDF())
-        // re-runs in one session (test + Verify + Bench share sweeps) replace
-        // the previous replay's sink table
-        spark.catalog.dropTempView(sinkName)
-        val q = out.writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .format("memory").queryName(sinkName).start()
-        try {
-          batches.foreach { b => in.addData(b); q.processAllAvailable() }
-          if (sentinels) {
-            val maxMs = batches.flatten.map(_.timestamp.getTime).max
-            // far past any real session (30 min gap) or window (1 h) end
-            in.addData(Ev(-1L, "s", ts(maxMs + 3L * 3600 * 1000)))
-            q.processAllAvailable()
-            in.addData(Ev(-1L, "s", ts(maxMs + 6L * 3600 * 1000)))
-            q.processAllAvailable()
-          }
-        } finally StreamQuiet.quietStop(q)
-      }
+    val in = MemoryStream[Ev](spark)
+    runToMemory(spark, sinkName, mk(in.toDF()), pins = pins) { q =>
+      batches.foreach { b => in.addData(b); q.processAllAvailable() }
+      flush(q, batches.flatten, Seq(in), flushHours)
     }
-    spark.table(sinkName)
   }
 
   /** events → Ev rows, one driver-side fixture collect (bounded, see
@@ -350,17 +350,13 @@ object ReplayOps extends QueryModule {
   private def watermarkDropReplay(spark: SparkSession, dir: String): DataFrame = {
     val evs = fixture(spark, dir)
     val (evens, odds) = evs.partition(_.key % 2 == 0)
-    val maxMs = evs.map(_.timestamp.getTime).max
-    // noData = true: this replay verifies the engine's DEFAULT late-drop
+    // NoData: this replay verifies the engine's DEFAULT late-drop
     // behavior, and the watermark a batch filters against only reaches
     // the aggregation through the default no-data-batch propagation —
     // with it disabled the odd batch runs before the evens' watermark
     // applies and nothing is dropped (measured: 4006 rows vs 2132)
-    val out = replay(spark,
-      Seq(evens.toSeq, odds.toSeq,
-        Seq(Ev(-1L, "s", ts(maxMs + 50L * 3600 * 1000))),
-        Seq(Ev(-1L, "s", ts(maxMs + 52L * 3600 * 1000)))),
-      "replay_wm_drop", sentinels = false, noData = true) { df =>
+    val out = replay(spark, Seq(evens.toSeq, odds.toSeq), "replay_wm_drop",
+      flushHours = Seq(50L, 52L), pins = Seq(NoData)) { df =>
       StreamJobs.windowedCounts(df, "1 day", "25 hours")
     }
     QOps.ordered1(
@@ -376,7 +372,7 @@ object ReplayOps extends QueryModule {
     * not). */
   private def dedupReplay(spark: SparkSession, dir: String): DataFrame = {
     val evs = fixture(spark, dir)
-    val out = replay(spark, Seq(evs.toSeq), "replay_dedup", sentinels = false) {
+    val out = replay(spark, Seq(evs.toSeq), "replay_dedup", flushHours = Nil) {
       df => StreamJobs.streamingDedup(df, "0 seconds")
     }
     QOps.ordered1(
@@ -397,7 +393,7 @@ object ReplayOps extends QueryModule {
     val spanDays = (evs.last.timestamp.getTime - evs.head.timestamp.getTime) /
       86400000L + 2
     val out = replay(spark, Seq(b1.toSeq, b2.toSeq), "replay_dedup_ww",
-      sentinels = false) { df =>
+      flushHours = Nil) { df =>
       StreamJobs.streamingDedupWithinWatermark(df, s"$spanDays days")
     }
     QOps.ordered1(
@@ -409,30 +405,35 @@ object ReplayOps extends QueryModule {
     * ranked in foreachBatch, batch-keyed overwrite sink) replayed through a
     * real TopicTableSink dir and read back. k=3, 1 h tumbling windows. */
   private def topkReplay(spark: SparkSession, dir: String): DataFrame = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val evs = fixture(spark, dir)
-    withTempDir("graft_replay_topk") { sinkDir =>
-      withTempDir("graft_replay_topk_ck") { ckpt =>
-        val in = MemoryStream[Ev]
-        val sink = new TopicTableSink(sinkDir + "/t")
-        val prevParts = pinPartitions(spark)
+    withTempDir("graft_replay_topk") { root =>
+      val in = MemoryStream[Ev](spark)
+      val sink = new TopicTableSink(root + "/t")
+      withReplayConf(spark) {
         val q = StreamJobs.windowedTopK(in.toDF(), "1 hour", "0 seconds", 3, sink,
-          checkpoint = Some(ckpt))
-        try {
-          in.addData(evs.toSeq); q.processAllAvailable()
-          val maxMs = evs.map(_.timestamp.getTime).max
-          in.addData(Ev(-1L, "s", ts(maxMs + 3L * 3600 * 1000))); q.processAllAvailable()
-          in.addData(Ev(-1L, "s", ts(maxMs + 6L * 3600 * 1000))); q.processAllAvailable()
-        } finally { StreamQuiet.quietStop(q); restorePartitions(spark, prevParts) }
-        // materialize BEFORE the temp sink dir is deleted on scope exit
-        materialize(QOps.ordered1(
-          sink.read(spark).filter(col("key") >= 0)
-            .select(col("window_start").cast("timestamp_ntz").as("window_start"),
-              col("key").as("user_id"), col("n"), col("rk")),
-          col("window_start"), col("rk")))
+          checkpoint = Some(root + "/ckpt"))
+        try { in.addData(evs.toSeq); q.processAllAvailable(); flush(q, evs, Seq(in)) }
+        finally StreamQuiet.quietStop(q)
       }
+      // materialize BEFORE the temp sink dir is deleted on scope exit
+      materialize(QOps.ordered1(
+        sink.read(spark).filter(col("key") >= 0)
+          .select(col("window_start").cast("timestamp_ntz").as("window_start"),
+            col("key").as("user_id"), col("n"), col("rk")),
+        col("window_start"), col("rk")))
     }
+  }
+
+  /** Enqueue the fixture's views on `views` and its purchases on
+    * `purchases` BEFORE the query starts, so its first batch takes both
+    * sides at once. Fed after start, the query's trigger can pick up the
+    * first side alone, and the replay runs one batch more than it means
+    * to. */
+  private def feedBoth(views: MemoryStream[Ev], purchases: MemoryStream[Ev],
+      evs: Array[Ev]): Unit = {
+    views.addData(evs.filter(_.value == "view").toSeq)
+    purchases.addData(evs.filter(_.value == "purchase").toSeq)
   }
 
   /** Stream-stream INTERVAL join (StreamJobs.streamStreamJoin): views
@@ -440,26 +441,16 @@ object ReplayOps extends QueryModule {
     * matches emit as soon as both sides are buffered, so a single batch per
     * side replays to exactly the batch interval-join result. */
   private def joinReplay(spark: SparkSession, dir: String): DataFrame = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val evs = fixture(spark, dir)
-    val lIn = MemoryStream[Ev]
-    val rIn = MemoryStream[Ev]
+    val lIn = MemoryStream[Ev](spark)
+    val rIn = MemoryStream[Ev](spark)
     val out = StreamJobs.streamStreamJoin(lIn.toDF(), rIn.toDF(),
       "1 hour", "0 seconds")
-    spark.catalog.dropTempView("replay_join")
-    val ckpt = mkTempDir("graft_replay_join")
-    val prevParts = pinPartitions(spark)
-    val q = out.writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .format("memory").queryName("replay_join").start()
-    try {
-      lIn.addData(evs.filter(_.value == "view").toSeq)
-      rIn.addData(evs.filter(_.value == "purchase").toSeq)
-      q.processAllAvailable()
-    } finally { StreamQuiet.quietStop(q); rmTree(ckpt); restorePartitions(spark, prevParts) }
+    feedBoth(lIn, rIn, evs)
+    val got = runToMemory(spark, "replay_join", out)(_.processAllAvailable())
     QOps.ordered1(
-      spark.table("replay_join").select(
+      got.select(
         col("l_key").as("user_id"),
         col("l_ts").cast("timestamp_ntz").as("view_ts"),
         col("r_ts").cast("timestamp_ntz").as("purchase_ts")),
@@ -473,32 +464,19 @@ object ReplayOps extends QueryModule {
     * watermark is the min across inputs — and two are needed: eviction
     * happens in the batch AFTER the watermark advances. */
   private def leftJoinReplay(spark: SparkSession, dir: String): DataFrame = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val evs = fixture(spark, dir)
-    val lIn = MemoryStream[Ev]
-    val rIn = MemoryStream[Ev]
+    val lIn = MemoryStream[Ev](spark)
+    val rIn = MemoryStream[Ev](spark)
     val out = StreamJobs.streamStreamLeftOuterJoin(lIn.toDF(), rIn.toDF(),
       "1 hour", "0 seconds")
-    spark.catalog.dropTempView("replay_left_join")
-    val ckpt = mkTempDir("graft_replay_ljoin")
-    val prevParts = pinPartitions(spark)
-    val q = out.writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .format("memory").queryName("replay_left_join").start()
-    try {
-      lIn.addData(evs.filter(_.value == "view").toSeq)
-      rIn.addData(evs.filter(_.value == "purchase").toSeq)
+    feedBoth(lIn, rIn, evs)
+    val got = runToMemory(spark, "replay_left_join", out) { q =>
       q.processAllAvailable()
-      val maxMs = evs.map(_.timestamp.getTime).max
-      Seq(3L, 6L).foreach { h =>
-        lIn.addData(Ev(-1L, "s", ts(maxMs + h * 3600 * 1000)))
-        rIn.addData(Ev(-1L, "s", ts(maxMs + h * 3600 * 1000)))
-        q.processAllAvailable()
-      }
-    } finally { StreamQuiet.quietStop(q); rmTree(ckpt); restorePartitions(spark, prevParts) }
+      flush(q, evs, Seq(lIn, rIn))
+    }
     QOps.ordered1(
-      spark.table("replay_left_join").filter(col("l_key") >= 0).select(
+      got.filter(col("l_key") >= 0).select(
         col("l_key").as("user_id"),
         col("l_ts").cast("timestamp_ntz").as("view_ts"),
         col("r_ts").cast("timestamp_ntz").as("purchase_ts")),
@@ -510,32 +488,19 @@ object ReplayOps extends QueryModule {
     * null-padded once the watermark finalizes them. Sentinels to both
     * streams, twice, as in [[leftJoinReplay]]. */
   private def fullOuterJoinReplay(spark: SparkSession, dir: String): DataFrame = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val evs = fixture(spark, dir)
-    val lIn = MemoryStream[Ev]
-    val rIn = MemoryStream[Ev]
+    val lIn = MemoryStream[Ev](spark)
+    val rIn = MemoryStream[Ev](spark)
     val out = StreamJobs.streamStreamFullOuterJoin(lIn.toDF(), rIn.toDF(),
       "1 hour", "0 seconds")
-    spark.catalog.dropTempView("replay_full_join")
-    val ckpt = mkTempDir("graft_replay_fjoin")
-    val prevParts = pinPartitions(spark)
-    val q = out.writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .format("memory").queryName("replay_full_join").start()
-    try {
-      lIn.addData(evs.filter(_.value == "view").toSeq)
-      rIn.addData(evs.filter(_.value == "purchase").toSeq)
+    feedBoth(lIn, rIn, evs)
+    val got = runToMemory(spark, "replay_full_join", out) { q =>
       q.processAllAvailable()
-      val maxMs = evs.map(_.timestamp.getTime).max
-      Seq(3L, 6L).foreach { h =>
-        lIn.addData(Ev(-1L, "s", ts(maxMs + h * 3600 * 1000)))
-        rIn.addData(Ev(-1L, "s", ts(maxMs + h * 3600 * 1000)))
-        q.processAllAvailable()
-      }
-    } finally { StreamQuiet.quietStop(q); rmTree(ckpt); restorePartitions(spark, prevParts) }
+      flush(q, evs, Seq(lIn, rIn))
+    }
     QOps.ordered1(
-      spark.table("replay_full_join")
+      got
         .filter(coalesce(col("l_key"), col("r_key")) >= 0)
         .select(
           coalesce(col("l_key"), col("r_key")).as("user_id"),
@@ -568,30 +533,19 @@ object ReplayOps extends QueryModule {
     * resets). TimeMode.None — no watermark, no sentinels; the memory sink
     * holds exactly the admitted rows. transformWithState only runs on the
     * RocksDB state store in Spark 4.1, so the provider is pinned for the
-    * query and restored after (ReplaySpec separately proves replay outputs
-    * are backend-independent). */
+    * query ([[RocksDb]]; ReplaySpec separately proves replay outputs are
+    * backend-independent). */
   private def rateLimitReplay(spark: SparkSession, dir: String): DataFrame = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val evs = fixture(spark, dir)
     val (b1, b2) = evs.splitAt(evs.length / 2) // fixture is (ts, eid)-sorted
-    val in = MemoryStream[Ev]
+    val in = MemoryStream[Ev](spark)
     val out = StreamJobs.rateLimitPerKey(in.toDF(), 3, 86400000000L)
-    spark.catalog.dropTempView("replay_rate_limit")
-    val ckpt = mkTempDir("graft_replay_rlim")
-    val prevParts = pinPartitions(spark)
-    withRocksDb(spark) {
-      val q = out.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt.toString)
-        .format("memory").queryName("replay_rate_limit").start()
-      try {
-        Seq(b1, b2).foreach { b => in.addData(b.toSeq); q.processAllAvailable() }
-      } finally {
-        StreamQuiet.quietStop(q); rmTree(ckpt); restorePartitions(spark, prevParts)
-      }
+    val got = runToMemory(spark, "replay_rate_limit", out, pins = Seq(RocksDb)) { q =>
+      Seq(b1, b2).foreach { b => in.addData(b.toSeq); q.processAllAvailable() }
     }
     QOps.ordered1(
-      spark.table("replay_rate_limit")
+      got
         .select(col("key").as("user_id"), col("eid").as("event_id")),
       col("user_id"), col("event_id"))
   }
@@ -602,50 +556,20 @@ object ReplayOps extends QueryModule {
     * variables must survive a batch boundary for the per-row running rank
     * and trailing-max features to hash-match the batch window oracle. */
   private def trailStatsReplay(spark: SparkSession, dir: String): DataFrame = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val evs = fixture(spark, dir)
     val (b1, b2) = evs.splitAt(evs.length / 2) // fixture is (ts, eid)-sorted
-    val in = MemoryStream[Ev]
+    val in = MemoryStream[Ev](spark)
     val out = StreamJobs.trailStatsTws(in.toDF(), 3)
-    spark.catalog.dropTempView("replay_tws_trail")
-    val ckpt = mkTempDir("graft_replay_trail")
-    val prevParts = pinPartitions(spark)
-    withRocksDb(spark) {
-      val q = out.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt.toString)
-        .format("memory").queryName("replay_tws_trail").start()
-      try {
-        Seq(b1, b2).foreach { b => in.addData(b.toSeq); q.processAllAvailable() }
-      } finally {
-        StreamQuiet.quietStop(q); rmTree(ckpt)
-        restorePartitions(spark, prevParts)
-      }
+    val got = runToMemory(spark, "replay_tws_trail", out, pins = Seq(RocksDb)) { q =>
+      Seq(b1, b2).foreach { b => in.addData(b.toSeq); q.processAllAvailable() }
     }
     QOps.ordered1(
-      spark.table("replay_tws_trail")
+      got
         .select(col("key").as("user_id"), col("eid").as("event_id"),
           col("typeRank").as("type_rank"),
           col("trailMaxCents").as("trail_max_cents")),
       col("user_id"), col("event_id"))
-  }
-
-  /** Pin the RocksDB state store provider (the only backend
-    * transformWithState runs on in Spark 4.1) around `body`, restoring the
-    * session's previous provider after. (Round 13 measured RocksDB
-    * changelog-checkpointing and trackTotalNumberOfRows=false pins here:
-    * no win outside noise at replay state sizes — per-batch cost is the
-    * per-row store round-trips inside the processors, fixed in
-    * [[TwsTrailProcessor]], not the commit I/O. Left at defaults.) */
-  private def withRocksDb[A](spark: SparkSession)(body: => A): A = {
-    val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(ProviderKey)
-    spark.conf.set(ProviderKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally prev match {
-      case Some(v) => spark.conf.set(ProviderKey, v)
-      case None    => spark.conf.unset(ProviderKey)
-    }
   }
 
   /** Map [[StreamJobs.sessionizeTws]] output (key, startUs, lastUs, n) onto
@@ -668,37 +592,21 @@ object ReplayOps extends QueryModule {
     * passes last + gap. Two time-split batches prove the open-session
     * ValueState resumes across the batch boundary; two watermark sentinels
     * (+3 h / +6 h past the data, the restartReplay pattern) then fire every
-    * remaining timer — timers only run inside batches, and pinPartitions
+    * remaining timer — timers only run inside batches, and [[ReplayConf]]
     * disables no-data batches, so the second sentinel batch executes with
     * the first sentinel's watermark. Oracle: the UNCHANGED batch session
     * SQL — the timer path is correct iff the hash doesn't move. */
   private def twsSessionReplay(spark: SparkSession, dir: String): DataFrame = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val evs = fixture(spark, dir)
     val (b1, b2) = evs.splitAt(evs.length / 2)
-    val in = MemoryStream[Ev]
+    val in = MemoryStream[Ev](spark)
     val out = StreamJobs.sessionizeTws(in.toDF(), 1800000000L, "0 seconds")
-    spark.catalog.dropTempView("replay_tws_session")
-    val ckpt = mkTempDir("graft_replay_twss")
-    val prevParts = pinPartitions(spark)
-    withRocksDb(spark) {
-      val q = out.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt.toString)
-        .format("memory").queryName("replay_tws_session").start()
-      try {
-        Seq(b1, b2).foreach { b => in.addData(b.toSeq); q.processAllAvailable() }
-        val maxMs = evs.map(_.timestamp.getTime).max
-        Seq(3L, 6L).foreach { h =>
-          in.addData(Ev(-1L, "s", ts(maxMs + h * 3600 * 1000)))
-          q.processAllAvailable()
-        }
-      } finally {
-        StreamQuiet.quietStop(q); rmTree(ckpt)
-        restorePartitions(spark, prevParts)
-      }
-    }
-    twsSessionShape(spark.table("replay_tws_session"))
+    twsSessionShape(runToMemory(spark, "replay_tws_session", out,
+        pins = Seq(RocksDb)) { q =>
+      Seq(b1, b2).foreach { b => in.addData(b.toSeq); q.processAllAvailable() }
+      flush(q, evs, Seq(in))
+    })
   }
 
   /** Crash-restart replay of the transformWithState sessionizer ON THE
@@ -712,36 +620,26 @@ object ReplayOps extends QueryModule {
     * session oracle. Complements streaming_restart_replay (HDFS-backed
     * session_window aggregation) with Spark 4's stateful API + backend. */
   private def twsRestartReplay(spark: SparkSession, dir: String): DataFrame = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val evs = fixture(spark, dir)
     val (b1, b2) = evs.splitAt(evs.length / 2)
     withTempDir("graft_replay_twsr") { root =>
-      val prevParts = pinPartitions(spark)
-      try {
-        withRocksDb(spark) {
-          val in = MemoryStream[Ev]
-          val pipe = StreamJobs.sessionizeTws(in.toDF(), 1800000000L,
-            "0 seconds")
-          def start() = pipe.writeStream.outputMode("append")
-            .option("checkpointLocation", root + "/ckpt")
-            .option("path", root + "/out")
-            .format("parquet").start()
-          val q1 = start()
-          try { in.addData(b1.toSeq); q1.processAllAvailable() }
-          finally StreamQuiet.quietStop(q1)
-          val q2 = start() // SAME checkpoint, SAME sink: resume, not rebuild
-          try {
-            in.addData(b2.toSeq); q2.processAllAvailable()
-            val maxMs = evs.map(_.timestamp.getTime).max
-            Seq(3L, 6L).foreach { h =>
-              in.addData(Ev(-1L, "s", ts(maxMs + h * 3600 * 1000)))
-              q2.processAllAvailable()
-            }
-          } finally StreamQuiet.quietStop(q2)
-          materialize(twsSessionShape(spark.read.parquet(root + "/out")))
-        }
-      } finally restorePartitions(spark, prevParts)
+      withReplayConf(spark, RocksDb) {
+        val in = MemoryStream[Ev](spark)
+        val pipe = StreamJobs.sessionizeTws(in.toDF(), 1800000000L,
+          "0 seconds")
+        def start() = pipe.writeStream.outputMode("append")
+          .option("checkpointLocation", root + "/ckpt")
+          .option("path", root + "/out")
+          .format("parquet").start()
+        val q1 = start()
+        try { in.addData(b1.toSeq); q1.processAllAvailable() }
+        finally StreamQuiet.quietStop(q1)
+        val q2 = start() // SAME checkpoint, SAME sink: resume, not rebuild
+        try { in.addData(b2.toSeq); q2.processAllAvailable(); flush(q2, evs, Seq(in)) }
+        finally StreamQuiet.quietStop(q2)
+        materialize(twsSessionShape(spark.read.parquet(root + "/out")))
+      }
     }
   }
 
@@ -758,7 +656,7 @@ object ReplayOps extends QueryModule {
           .when(col("key") % 3 === 1, "silver").otherwise("bronze"))
     val evs = fixture(spark, dir)
     val out = replay(spark, Seq(evs.toSeq), "replay_enrich",
-      sentinels = false) { df => StreamJobs.streamStaticEnrich(df, dim) }
+      flushHours = Nil) { df => StreamJobs.streamStaticEnrich(df, dim) }
     QOps.ordered1(
       out.select(col("key").as("user_id"), col("value").as("event_type"),
         col("timestamp").cast("timestamp_ntz").as("ts"), col("tier")),
@@ -774,26 +672,19 @@ object ReplayOps extends QueryModule {
     * the FINAL count is the max (counts are monotone). Equals batch
     * count-per-key iff batch-2 state really resumed from batch 1. */
   private def runningCountsReplay(spark: SparkSession, dir: String): DataFrame = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val evs = fixture(spark, dir)
     val (b1, b2) = evs.splitAt(evs.length / 2)
-    val in = MemoryStream[KafkaShaped]
+    val in = MemoryStream[KafkaShaped](spark)
     val out = StreamJobs.runningCountsPerKey(in.toDS())
       .toDF("user_key", "n")
-    spark.catalog.dropTempView("replay_running_counts")
-    val ckpt = mkTempDir("graft_replay_rc")
-    val prevParts = pinPartitions(spark)
-    val q = out.writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt.toString)
-      .format("memory").queryName("replay_running_counts").start()
-    try {
+    val got = runToMemory(spark, "replay_running_counts", out, mode = "update") { q =>
       Seq(b1, b2).foreach { b =>
         in.addData(b.map(toKafkaShaped).toSeq); q.processAllAvailable()
       }
-    } finally { StreamQuiet.quietStop(q); rmTree(ckpt); restorePartitions(spark, prevParts) }
+    }
     QOps.ordered1(
-      spark.table("replay_running_counts")
+      got
         .groupBy(col("user_key")).agg(max(col("n")).as("n")),
       col("user_key"))
   }
@@ -804,26 +695,19 @@ object ReplayOps extends QueryModule {
     * count and the final update per (user, type) equals the batch count.
     * Two batches exercise cross-batch summary state. */
   private def heavyHittersReplay(spark: SparkSession, dir: String): DataFrame = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val evs = fixture(spark, dir)
     val (b1, b2) = evs.splitAt(evs.length / 2)
-    val in = MemoryStream[KafkaShaped]
+    val in = MemoryStream[KafkaShaped](spark)
     val out = StreamJobs.streamingHeavyHitters(in.toDS(), capacity = 64)
       .toDF("user_key", "event_type", "cnt", "n_user")
-    spark.catalog.dropTempView("replay_heavy_hitters")
-    val ckpt = mkTempDir("graft_replay_hh")
-    val prevParts = pinPartitions(spark)
-    val q = out.writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt.toString)
-      .format("memory").queryName("replay_heavy_hitters").start()
-    try {
+    val got = runToMemory(spark, "replay_heavy_hitters", out, mode = "update") { q =>
       Seq(b1, b2).foreach { b =>
         in.addData(b.map(toKafkaShaped).toSeq); q.processAllAvailable()
       }
-    } finally { StreamQuiet.quietStop(q); rmTree(ckpt); restorePartitions(spark, prevParts) }
+    }
     QOps.ordered1(
-      spark.table("replay_heavy_hitters")
+      got
         .groupBy(col("user_key"), col("event_type"))
         .agg(max(col("cnt")).as("cnt"), max(col("n_user")).as("n_user")),
       col("user_key"), col("event_type"))
@@ -836,28 +720,18 @@ object ReplayOps extends QueryModule {
     * order, so the result is the ms-granularity as-of join the oracle
     * computes (state timestamps are Timestamp.getTime milliseconds). */
   private def temporalEnrichReplay(spark: SparkSession, dir: String): DataFrame = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val evs = fixture(spark, dir)
-    val uIn = MemoryStream[Ev]
-    val eIn = MemoryStream[Ev]
+    val uIn = MemoryStream[Ev](spark)
+    val eIn = MemoryStream[Ev](spark)
     def shape(df: DataFrame) = df.select(
       col("key").cast("string").as("key"),
       col("eid").cast("string").as("value"), col("timestamp"))
     val out = StreamJobs.temporalEnrich(shape(uIn.toDF()), shape(eIn.toDF()))
-    spark.catalog.dropTempView("replay_temporal_enrich")
-    val ckpt = mkTempDir("graft_replay_te")
-    val prevParts = pinPartitions(spark)
-    val q = out.toDF().writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .format("memory").queryName("replay_temporal_enrich").start()
-    try {
-      uIn.addData(evs.filter(_.value == "purchase").toSeq)
-      eIn.addData(evs.filter(_.value == "view").toSeq)
-      q.processAllAvailable()
-    } finally { StreamQuiet.quietStop(q); rmTree(ckpt); restorePartitions(spark, prevParts) }
+    feedBoth(eIn, uIn, evs)
+    val got = runToMemory(spark, "replay_temporal_enrich", out.toDF())(_.processAllAvailable())
     QOps.ordered1(
-      spark.table("replay_temporal_enrich").select(
+      got.select(
         col("key").as("user_key"), col("value").as("view_id"),
         col("dim_value").as("purchase_id"), col("tsMs").as("ts_ms")),
       col("user_key"), col("ts_ms"), col("view_id"))
@@ -870,25 +744,18 @@ object ReplayOps extends QueryModule {
     * CLOSES the sessions. The per-user summary equals the batch per-user
     * rollup (timestamps compared at the state store's ms granularity). */
   private def sessionizeReplay(spark: SparkSession, dir: String): DataFrame = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val evs = fixture(spark, dir)
-    val in = MemoryStream[KafkaShaped]
+    val in = MemoryStream[KafkaShaped](spark)
     val out = StreamJobs.sessionize(in.toDS(), gapMs = 1000L).toDF()
-    spark.catalog.dropTempView("replay_sessionize")
     // NO processAllAvailable and NO sentinel: with ProcessingTimeTimeout
     // the engine keeps planning no-data batches to fire due timeouts, so
     // processAllAvailable never quiesces (it wedged a 12-minute Verify run
     // before this was written) — the StreamJobsSpec pattern instead: feed
     // one batch, let the timeout-driven batches close every session, and
     // POLL the sink against the known closed-session count with a deadline.
-    val prevParts = pinPartitions(spark)
-    // ProcessingTimeTimeout fires in NO-DATA batches — this replay is the
-    // one that needs them (pinPartitions disables them for the others)
-    spark.conf.set(NoDataKey, "true")
-    val q = out.writeStream.outputMode("append")
-      .format("memory").queryName("replay_sessionize").start()
-    try {
+    // ProcessingTimeTimeout fires in NO-DATA batches, hence the NoData pin.
+    val got = runToMemory(spark, "replay_sessionize", out, pins = Seq(NoData)) { _ =>
       val expected = evs.map(_.key).distinct.length.toLong
       in.addData(evs.map(toKafkaShaped).toSeq)
       val deadline = System.currentTimeMillis + 120000
@@ -902,14 +769,14 @@ object ReplayOps extends QueryModule {
         Thread.sleep(25)
       // a wedged timeout path must fail HERE with a named cause, not
       // downstream as a confusing oracle hash mismatch on missing rows
-      val got = spark.table("replay_sessionize").count()
-      if (got < expected) throw new IllegalStateException(
-        s"sessionizeReplay: poll deadline (120 s) hit with $got of " +
+      val closed = spark.table("replay_sessionize").count()
+      if (closed < expected) throw new IllegalStateException(
+        s"sessionizeReplay: poll deadline (120 s) hit with $closed of " +
           s"$expected sessions closed — the ProcessingTimeTimeout batches " +
           "did not fire; result would be incomplete")
-    } finally { StreamQuiet.quietStop(q); restorePartitions(spark, prevParts) }
+    }
     QOps.ordered1(
-      spark.table("replay_sessionize")
+      got
         .select(col("key").as("user_key"), col("n_events"),
           unix_millis(col("first_ts")).as("first_ms"),
           unix_millis(col("last_ts")).as("last_ms")),
@@ -922,27 +789,20 @@ object ReplayOps extends QueryModule {
     * express. Two time-split batches pin the cross-batch quiet window; the
     * oracle walks the same chain with a recursive CTE. Exact µs longs. */
   private def debounceChainedReplay(spark: SparkSession, dir: String): DataFrame = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val evs = fixture(spark, dir)
     val (b1, b2) = evs.splitAt(evs.length / 2)
-    val in = MemoryStream[StreamJobs.MetricPoint]
+    val in = MemoryStream[StreamJobs.MetricPoint](spark)
     val out = StreamJobs.debounce(in.toDS(), quietMs = 300000000L).toDF()
-    spark.catalog.dropTempView("replay_debounce")
-    val ckpt = mkTempDir("graft_replay_db")
-    val prevParts = pinPartitions(spark)
-    val q = out.writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .format("memory").queryName("replay_debounce").start()
-    try {
+    val got = runToMemory(spark, "replay_debounce", out) { q =>
       Seq(b1, b2).foreach { b =>
         in.addData(b.map(e =>
           StreamJobs.MetricPoint(s"${e.key}|${e.value}", e.us, e.dval)).toSeq)
         q.processAllAvailable()
       }
-    } finally { StreamQuiet.quietStop(q); rmTree(ckpt); restorePartitions(spark, prevParts) }
+    }
     QOps.ordered1(
-      spark.table("replay_debounce").select(
+      got.select(
         split(col("key"), "\\|").getItem(0).cast("long").as("user_id"),
         split(col("key"), "\\|").getItem(1).as("event_type"),
         col("tsMs").as("us")),
@@ -957,27 +817,20 @@ object ReplayOps extends QueryModule {
     * streaming plan with Spark's `round` (engine-identical half-away); two
     * time-split batches exercise cross-batch state. */
   private def anomalyExactReplay(spark: SparkSession, dir: String): DataFrame = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val evs = fixture(spark, dir)
     val (b1, b2) = evs.splitAt(evs.length / 2)
-    val in = MemoryStream[Ev]
+    val in = MemoryStream[Ev](spark)
     val shaped = in.toDF().select(
       col("key").cast("string").as("key"), col("us").as("tsUs"),
       round(col("dval") * 100).cast("long").as("centi"))
       .as[StreamJobs.ExactMetricPoint]
     val out = StreamJobs.anomalyDetectExact(shaped).toDF()
-    spark.catalog.dropTempView("replay_anomaly")
-    val ckpt = mkTempDir("graft_replay_an")
-    val prevParts = pinPartitions(spark)
-    val q = out.writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .format("memory").queryName("replay_anomaly").start()
-    try {
+    val got = runToMemory(spark, "replay_anomaly", out) { q =>
       Seq(b1, b2).foreach { b => in.addData(b.toSeq); q.processAllAvailable() }
-    } finally { StreamQuiet.quietStop(q); rmTree(ckpt); restorePartitions(spark, prevParts) }
+    }
     QOps.ordered1(
-      spark.table("replay_anomaly").select(
+      got.select(
         col("key").cast("long").as("user_id"), col("tsUs").as("us"),
         col("centi"), col("n_prior")),
       col("user_id"), col("us"), col("centi"))
@@ -990,26 +843,19 @@ object ReplayOps extends QueryModule {
     * oracle recomputes the identical signature family in SQL (md5 is
     * available in both engines). */
   private def nearDupReplay(spark: SparkSession, dir: String): DataFrame = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val docs = Tables.t(spark, dir, "documents")
       .orderBy("doc_id").select(col("doc_id"), col("text")).collect()
       .map(r => StreamJobs.StreamDoc(r.getLong(0), r.getString(1),
         ts(1704067200000L)))
-    val in = MemoryStream[StreamJobs.StreamDoc]
+    val in = MemoryStream[StreamJobs.StreamDoc](spark)
     val out = StreamJobs.streamingNearDup(in.toDS(),
       watermark = "0 seconds", ttlMs = 365L * 24 * 3600 * 1000).toDF()
-    spark.catalog.dropTempView("replay_neardup")
-    val ckpt = mkTempDir("graft_replay_nd")
-    val prevParts = pinPartitions(spark)
-    val q = out.writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .format("memory").queryName("replay_neardup").start()
-    try {
+    val got = runToMemory(spark, "replay_neardup", out) { q =>
       in.addData(docs.toSeq); q.processAllAvailable()
-    } finally { StreamQuiet.quietStop(q); rmTree(ckpt); restorePartitions(spark, prevParts) }
+    }
     QOps.ordered1(
-      spark.table("replay_neardup").select(
+      got.select(
         col("docId").as("doc_id"), col("dupOf").as("dup_of"),
         col("band"), col("key")),
       col("doc_id"), col("band"))
@@ -1031,26 +877,25 @@ object ReplayOps extends QueryModule {
     * rows are tagged 'topic' | 'kv' so ONE hash covers both sinks.
     */
   private def summaryReplay(spark: SparkSession, dir: String): DataFrame = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val evs = fixture(spark, dir)
     val (b1, b2) = evs.splitAt(evs.length / 2)
     withTempDir("graft_replay_summary") { root =>
       val topicSink = new TopicTableSink(root + "/topic")
       val kvSink = new KvUpsertSink(root + "/kv")
-      val in = MemoryStream[Ev]
-      val prevParts = pinPartitions(spark)
+      val in = MemoryStream[Ev](spark)
       // the pipeline consumes the Kafka pair shape (key, value, timestamp);
       // key cast to string = the reference's String key
       val shaped = in.toDF().select(
         col("key").cast("string").as("key"), col("value"), col("timestamp"))
-      val q = StreamJobs.summaryPipeline(shaped, "events", "out",
-        topicSink, kvSink,
-        org.apache.spark.sql.streaming.Trigger.ProcessingTime(0),
-        checkpoint = Some(root + "/ckpt"))
-      try {
-        Seq(b1, b2).foreach { b => in.addData(b.toSeq); q.processAllAvailable() }
-      } finally { StreamQuiet.quietStop(q); restorePartitions(spark, prevParts) }
+      withReplayConf(spark) {
+        val q = StreamJobs.summaryPipeline(shaped, "events", "out",
+          topicSink, kvSink,
+          org.apache.spark.sql.streaming.Trigger.ProcessingTime(0),
+          checkpoint = Some(root + "/ckpt"))
+        try Seq(b1, b2).foreach { b => in.addData(b.toSeq); q.processAllAvailable() }
+        finally StreamQuiet.quietStop(q)
+      }
       val kv = kvSink.read(spark).select(
         lit("kv").as("src"), col("rowkey").as("k1"), col("cf").as("k2"),
         col("qualifier").as("k3"), col("cell_value").as("v"))
@@ -1115,22 +960,21 @@ object ReplayOps extends QueryModule {
     * ts, ties by max cell_value — deterministic, and replayed by the
     * oracle's window. */
   private def perRecordReplay(spark: SparkSession, dir: String): DataFrame = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val evs = fixture(spark, dir)
     val (b1, b2) = evs.splitAt(evs.length / 2)
     withTempDir("graft_replay_per_record") { root =>
       val kvSink = new KvUpsertSink(root + "/kv")
-      val in = MemoryStream[Ev]
-      val prevParts = pinPartitions(spark)
+      val in = MemoryStream[Ev](spark)
       val shaped = in.toDF().select(
         col("key").cast("string").as("key"), col("value"), col("timestamp"))
-      val q = StreamJobs.perRecordPipeline(shaped, kvSink,
-        org.apache.spark.sql.streaming.Trigger.ProcessingTime(0),
-        checkpoint = Some(root + "/ckpt"))
-      try {
-        Seq(b1, b2).foreach { b => in.addData(b.toSeq); q.processAllAvailable() }
-      } finally { StreamQuiet.quietStop(q); restorePartitions(spark, prevParts) }
+      withReplayConf(spark) {
+        val q = StreamJobs.perRecordPipeline(shaped, kvSink,
+          org.apache.spark.sql.streaming.Trigger.ProcessingTime(0),
+          checkpoint = Some(root + "/ckpt"))
+        try Seq(b1, b2).foreach { b => in.addData(b.toSeq); q.processAllAvailable() }
+        finally StreamQuiet.quietStop(q)
+      }
       materialize(QOps.ordered1(
         kvSink.read(spark)
           .select(col("rowkey"), col("cf"), col("qualifier"), col("cell_value")),
@@ -1161,14 +1005,12 @@ object ReplayOps extends QueryModule {
     * restart-safety the reference's driver `var counter` could never have
     * (SURVEY §2.3 A4). */
   private def restartReplay(spark: SparkSession, dir: String): DataFrame = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val evs = fixture(spark, dir)
     val (b1, b2) = evs.splitAt(evs.length / 2)
     withTempDir("graft_replay_restart") { root =>
-      val prevParts = pinPartitions(spark)
-      try {
-        val in = MemoryStream[Ev]
+      withReplayConf(spark) {
+        val in = MemoryStream[Ev](spark)
         val pipe = StreamJobs.sessionWindowCounts(in.toDF(), "30 minutes",
           "0 seconds")
         def start() = pipe.writeStream.outputMode("append")
@@ -1178,14 +1020,8 @@ object ReplayOps extends QueryModule {
         val q1 = start()
         try { in.addData(b1.toSeq); q1.processAllAvailable() } finally StreamQuiet.quietStop(q1)
         val q2 = start() // SAME checkpoint, SAME sink: resume, not rebuild
-        try {
-          in.addData(b2.toSeq); q2.processAllAvailable()
-          val maxMs = evs.map(_.timestamp.getTime).max
-          in.addData(Ev(-1L, "s", ts(maxMs + 3L * 3600 * 1000)))
-          q2.processAllAvailable()
-          in.addData(Ev(-1L, "s", ts(maxMs + 6L * 3600 * 1000)))
-          q2.processAllAvailable()
-        } finally StreamQuiet.quietStop(q2)
+        try { in.addData(b2.toSeq); q2.processAllAvailable(); flush(q2, evs, Seq(in)) }
+        finally StreamQuiet.quietStop(q2)
         materialize(QOps.ordered1(
           spark.read.parquet(root + "/out").filter(col("key") >= 0)
             .select(col("key").as("user_id"),
@@ -1193,7 +1029,7 @@ object ReplayOps extends QueryModule {
               col("session_end").cast("timestamp_ntz").as("session_end"),
               col("n")),
           col("user_id"), col("session_start")))
-      } finally restorePartitions(spark, prevParts)
+      }
     }
   }
 
@@ -1207,7 +1043,6 @@ object ReplayOps extends QueryModule {
     * `hellinger` double is derived from h2_pico and excluded from the
     * compare (redundant with the exact column). */
   private def driftReplay(spark: SparkSession, dir: String): DataFrame = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val evs = fixture(spark, dir)
     val baseline = cappedEvents(spark, dir)
@@ -1215,22 +1050,18 @@ object ReplayOps extends QueryModule {
       .agg(count(lit(1)).as("qc"))
     withTempDir("graft_replay_drift") { root =>
       val sink = new TopicTableSink(root + "/t")
-      val in = MemoryStream[Ev]
-      val prevParts = pinPartitions(spark)
+      val in = MemoryStream[Ev](spark)
       // drift is over the TYPE mix: key = event_type (the Ev value column)
       val shaped = in.toDF().select(col("value").as("key"), col("timestamp"))
-      val q = StreamJobs.streamingDriftMonitor(shaped, "1 hour", "0 seconds",
-        baseline, sink, alarmPico = 10000000000L,
-        org.apache.spark.sql.streaming.Trigger.ProcessingTime(0),
-        checkpoint = Some(root + "/ckpt"))
+      withReplayConf(spark) {
+        val q = StreamJobs.streamingDriftMonitor(shaped, "1 hour", "0 seconds",
+          baseline, sink, alarmPico = 10000000000L,
+          org.apache.spark.sql.streaming.Trigger.ProcessingTime(0),
+          checkpoint = Some(root + "/ckpt"))
+        try { in.addData(evs.toSeq); q.processAllAvailable(); flush(q, evs, Seq(in)) }
+        finally StreamQuiet.quietStop(q)
+      }
       val maxMs = evs.map(_.timestamp.getTime).max
-      try {
-        in.addData(evs.toSeq); q.processAllAvailable()
-        in.addData(Ev(-1L, "s", ts(maxMs + 3L * 3600 * 1000)))
-        q.processAllAvailable()
-        in.addData(Ev(-1L, "s", ts(maxMs + 6L * 3600 * 1000)))
-        q.processAllAvailable()
-      } finally { StreamQuiet.quietStop(q); restorePartitions(spark, prevParts) }
       val maxHour = new Timestamp(maxMs - Math.floorMod(maxMs, 3600000L))
       materialize(QOps.ordered1(
         sink.read(spark)
@@ -1274,27 +1105,20 @@ object ReplayOps extends QueryModule {
     * ppm-quantized prior mean/σ hash-match exactly (same argument as the
     * bit-exact `cosine_topk_fast` codegen check). */
   private def anomalyFloatReplay(spark: SparkSession, dir: String): DataFrame = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val evs = fixture(spark, dir)
     val (b1, b2) = evs.splitAt(evs.length / 2)
-    val in = MemoryStream[StreamJobs.MetricPoint]
+    val in = MemoryStream[StreamJobs.MetricPoint](spark)
     val out = StreamJobs.anomalyDetect(in.toDS(), k = 3.0, minPrior = 5L).toDF()
-    spark.catalog.dropTempView("replay_anomaly_float")
-    val ckpt = mkTempDir("graft_replay_anf")
-    val prevParts = pinPartitions(spark)
-    val q = out.writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .format("memory").queryName("replay_anomaly_float").start()
-    try {
+    val got = runToMemory(spark, "replay_anomaly_float", out) { q =>
       Seq(b1, b2).foreach { b =>
         in.addData(b.map(e =>
           StreamJobs.MetricPoint(e.key.toString, e.us, e.dval)).toSeq)
         q.processAllAvailable()
       }
-    } finally { StreamQuiet.quietStop(q); rmTree(ckpt); restorePartitions(spark, prevParts) }
+    }
     QOps.ordered1(
-      spark.table("replay_anomaly_float").select(
+      got.select(
         col("key").cast("long").as("user_id"), col("tsMs").as("us"),
         round(col("value") * 100).cast("long").as("centi"),
         round(col("mean") * 1e6).cast("long").as("mean_ppm"),
@@ -1353,7 +1177,6 @@ object ReplayOps extends QueryModule {
     * shingle equi-join — duplicates preserved (a doc repeating a
     * contaminated shingle emits it once per occurrence in both engines). */
   private def decontaminateReplay(spark: SparkSession, dir: String): DataFrame = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val docs = Tables.t(spark, dir, "documents")
     val bench = docs.filter(col("doc_id") < 10)
@@ -1370,19 +1193,13 @@ object ReplayOps extends QueryModule {
       .orderBy("doc_id").select(col("doc_id"), col("text")).collect()
       .map(r => StreamJobs.StreamDoc(r.getLong(0), r.getString(1),
         ts(1704067200000L)))
-    val in = MemoryStream[StreamJobs.StreamDoc]
+    val in = MemoryStream[StreamJobs.StreamDoc](spark)
     val out = StreamJobs.streamingDecontaminate(in.toDS(), bench)
-    spark.catalog.dropTempView("replay_decontaminate")
-    val ckpt = mkTempDir("graft_replay_dc")
-    val prevParts = pinPartitions(spark)
-    val q = out.writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .format("memory").queryName("replay_decontaminate").start()
-    try {
+    val got = runToMemory(spark, "replay_decontaminate", out) { q =>
       in.addData(corpus.toSeq); q.processAllAvailable()
-    } finally { StreamQuiet.quietStop(q); rmTree(ckpt); restorePartitions(spark, prevParts) }
+    }
     QOps.ordered1(
-      spark.table("replay_decontaminate")
+      got
         .select(col("docId").as("doc_id"), col("sh")),
       col("doc_id"), col("sh"))
   }

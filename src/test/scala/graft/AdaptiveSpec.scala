@@ -9,23 +9,13 @@ class AdaptiveSpec extends SparkSpec {
   import spark.implicits._
 
   test("AQE splits a skewed sort-merge join partition at runtime") {
-    val c = spark.conf
-    val keys = Seq(
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.adaptive.coalescePartitions.enabled",
-      "spark.sql.shuffle.partitions")
-    val saved = keys.map(k => k -> c.getOption(k))
-    try {
-      c.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
-      c.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      c.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "32KB")
-      c.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16KB")
-      c.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      c.set("spark.sql.shuffle.partitions", "8")
-
+    GraftSession.withConf(spark,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1", // force SMJ
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "32KB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> "8") {
       // one key carries ~99% of the left side: its shuffle partition dwarfs
       // the median and crosses the lowered thresholds
       val left = spark.range(200000)
@@ -47,26 +37,16 @@ class AdaptiveSpec extends SparkSpec {
       assert(plan.contains("isFinalPlan=true"))
       assert(plan.contains("skew=true"),
         s"AQE did not mark the skewed join:\n$plan")
-    } finally saved.foreach {
-      case (k, Some(v)) => c.set(k, v)
-      case (k, None) => c.unset(k)
     }
   }
 
   test("runtime bloom filter prunes the probe side of a selective join") {
-    val c = spark.conf
-    val keys = Seq(
-      "spark.sql.optimizer.runtime.bloomFilter.enabled",
-      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-      "spark.sql.autoBroadcastJoinThreshold")
-    val saved = keys.map(k => k -> c.getOption(k))
-    try {
-      c.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+    GraftSession.withConf(spark,
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       // test-scale tables are far below the production thresholds
-      c.set("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "100MB")
-      c.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-      c.set("spark.sql.autoBroadcastJoinThreshold", "-1") // keep the SMJ shape
+      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") { // keep the SMJ shape
       val li = Tables.t(spark, sf001, "lineitem")
       val sel = Tables.t(spark, sf001, "orders")
         .filter($"o_totalprice" > 400000.0) // selective build side
@@ -76,9 +56,6 @@ class AdaptiveSpec extends SparkSpec {
       assert(plan.contains("bloom_filter") || plan.contains("BloomFilter"),
         s"no runtime bloom filter injected:\n$plan")
       assert(joined.count() > 0)
-    } finally saved.foreach {
-      case (k, Some(v)) => c.set(k, v)
-      case (k, None) => c.unset(k)
     }
   }
 }

@@ -58,6 +58,37 @@ class PlanShapeSpec extends SparkSpec {
     assert(filesMatching("RowNumberTopKRewrite\\.install\\(") === Seq("GraftSession.scala"))
   }
 
+  /** Names of the top-level members of `file` whose code (comment lines
+    * skipped) contains `needle`; a member runs from its two-space-indented
+    * definition line to the next one. */
+  private def membersContaining(file: java.nio.file.Path, needle: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val Member = ("  (?:(?:private|protected)(?:\\[\\w+\\])? |override |lazy |final )*" +
+      "(?:def|val|var|object|class|case class|trait) (\\w+).*").r
+    var current = ""
+    java.nio.file.Files.readAllLines(file).asScala.flatMap { line =>
+      line match { case Member(n) => current = n; case _ => () }
+      val t = line.trim
+      val comment = t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")
+      if (!comment && line.contains(needle)) Some(current) else None
+    }.distinct.toSeq
+  }
+
+  test("the replay harness helpers are the only code that starts a memory " +
+      "sink, makes a scratch dir or sets conf, and GraftSession.withConf " +
+      "the only code under src/main that unsets conf") {
+    import scala.jdk.CollectionConverters._
+    val replay = java.nio.file.Paths.get("src/main/scala/graft/streaming/ReplayOps.scala")
+    assert(membersContaining(replay, ".format(\"memory\")") === Seq("runToMemory"))
+    assert(membersContaining(replay, "createTempDirectory") === Seq("withTempDir"))
+    assert(membersContaining(replay, "spark.conf.set(") === Seq())
+    val unsetting = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .flatMap(f => membersContaining(f, "conf.unset(").map(m => s"${f.getFileName}:$m"))
+      .toSeq
+    assert(unsetting === Seq("GraftSession.scala:withConf"))
+  }
+
   test("kmv_distinct k-smallest is heap-bounded BEFORE the shuffle") {
     // the aggregate-over-rank idiom rewritten into the bounded-heap
     // TopKPerKey: the shuffle carries at most k rows per group per input

@@ -195,15 +195,35 @@ class ReplaySpec extends SparkSpec {
     // replay (running counts) — the two state-store code paths
     val names = Seq("streaming_session_replay", "streaming_running_counts_replay")
     val baseline = names.map(n => n -> rows(run(n))).toMap
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state." +
-      "RocksDBStateStoreProvider")
-    try names.foreach { n =>
-      assert(rows(run(n)) === baseline(n), s"$n diverges under RocksDB")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
+    GraftSession.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+      names.foreach { n =>
+        assert(rows(run(n)) === baseline(n), s"$n diverges under RocksDB")
+      }
     }
+  }
+
+  test("a replay whose query fails to start puts back the session conf " +
+      "and deletes its scratch dir") {
+    import scala.jdk.CollectionConverters._
+    import graft.streaming.{ReplayOps, StreamQuiet}
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.noDataMicroBatches.enabled",
+      "spark.sql.streaming.checkpointFileManagerClass",
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled")
+    def conf() = keys.map(k => k -> spark.conf.getOption(k))
+    def joinDirs() = java.nio.file.Files.list(
+        java.nio.file.Paths.get(ReplayOps.scratchRoot)).iterator.asScala
+      .map(_.getFileName.toString).filter(_.startsWith("graft_replay_join")).toSet
+    val confBefore = conf()
+    val dirsBefore = joinDirs()
+    // an active query already holds the replay's sink name, so the
+    // replay's own start() throws
+    val blocker = spark.readStream.format("rate").load()
+      .writeStream.format("memory").queryName("replay_join").start()
+    try intercept[IllegalArgumentException](run("streaming_join_replay"))
+    finally StreamQuiet.quietStop(blocker)
+    assert(conf() === confBefore)
+    assert(joinDirs() -- dirsBefore === Set.empty)
   }
 }

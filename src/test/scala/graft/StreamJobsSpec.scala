@@ -1078,11 +1078,8 @@ class StreamJobsSpec extends SparkSpec {
   test("rateLimitPerKey (transformWithState): cap binds across batches, " +
       "resets on a new window, keys are independent") {
     import graft.streaming.ReplayOps.Ev
-    val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(ProviderKey)
-    spark.conf.set(ProviderKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val in = MemoryStream[Ev]
       def ev(key: Long, eid: Long, us: Long) =
         Ev(key, "v", new java.sql.Timestamp(us / 1000), eid, 0.0, us)
@@ -1100,9 +1097,6 @@ class StreamJobsSpec extends SparkSpec {
       val got = spark.sql("select key, eid from rlim_unit")
         .as[(Long, Long)].collect().toSet
       assert(got === Set((1L, 1L), (1L, 2L), (2L, 10L), (1L, 4L), (2L, 11L)))
-    } finally prev match {
-      case Some(v) => spark.conf.set(ProviderKey, v)
-      case None    => spark.conf.unset(ProviderKey)
     }
   }
 
