@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FileSourceScanExec, FormattedMode}
 
@@ -17,8 +18,10 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, FormattedMode}
   *     an uncached diamond
   *   runMain graft.Inspect jobs <sfDir> name... [n]
   *     run each query n times (default 2) and print the total with its
-  *     fn/plan/exec split per run, then per-job wall times and per-micro-
-  *     batch durations of the last (warm) run
+  *     fn/plan/exec split per run, then every job of the last (warm) run
+  *     with its wall time, stages and tasks run, and description (a
+  *     streaming job's description ends in `batch = <id>`), and that
+  *     run's per-micro-batch durations
   */
 object Inspect {
   private val usage = "usage: graft.Inspect <explain|scans|jobs> <sfDir> [name...] [n]"
@@ -83,7 +86,9 @@ object Inspect {
     * (queryPlanning / walCommit / addBatch / getBatch / state commit — the
     * fixed overhead on the Spark driver that the [job] lines cannot see). */
   private def jobs(spark: SparkSession, sfDir: String, names: Seq[String], n: Int): Unit = {
-    val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
+    // job -> (start, description, stages run, tasks run); stage -> its job
+    val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, Int, Int)]()
+    val jobOf = new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Integer]()
     @volatile var enabled = false
     val batchLines = new org.apache.spark.sql.streaming.StreamingQueryListener {
       import org.apache.spark.sql.streaming.StreamingQueryListener._
@@ -104,14 +109,20 @@ object Inspect {
       override def onJobStart(js: SparkListenerJobStart): Unit = if (enabled) {
         val desc = Option(js.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
-        starts.put(js.jobId, (System.nanoTime(), desc))
+        js.stageIds.foreach(jobOf.put(_, js.jobId))
+        starts.put(js.jobId, (System.nanoTime(), desc.replace('\n', ' '), 0, 0))
       }
-      override def onJobEnd(je: SparkListenerJobEnd): Unit = if (enabled) {
-        Option(starts.remove(je.jobId)).foreach { case (t0, desc) =>
-          val ms = (System.nanoTime() - t0) / 1e6
-          if (ms >= 20) println(f"[job] ${je.jobId}%4d ${ms / 1000}%7.3f s  $desc")
+      // a skipped stage never completes, so it counts neither stage nor tasks
+      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
+        Option(jobOf.remove(sc.stageInfo.stageId)).foreach { job =>
+          starts.computeIfPresent(job, (_, j) =>
+            j.copy(_3 = j._3 + 1, _4 = j._4 + sc.stageInfo.numTasks))
         }
-      }
+      override def onJobEnd(je: SparkListenerJobEnd): Unit =
+        Option(starts.remove(je.jobId)).foreach { case (t0, desc, stages, tasks) =>
+          val ms = (System.nanoTime() - t0) / 1e6
+          println(f"[job] ${je.jobId}%4d ${ms / 1000}%7.3f s  stages=$stages tasks=$tasks  $desc")
+        }
     }
     spark.streams.addListener(batchLines)
     spark.sparkContext.addSparkListener(jobLines)

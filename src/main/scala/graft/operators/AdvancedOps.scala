@@ -447,7 +447,8 @@ object AdvancedOps extends QueryModule {
     *
     * Scale posture: a MERGE at 100 TB is exactly this shuffle-on-key
     * full-outer join; with a bucketed target table the shuffle of the target
-    * side disappears (see KvUpsertSink for the incremental form).
+    * side disappears. KvUpsertSink is the incremental form: each batch is
+    * appended, and the merge runs at read.
     */
   private def mergeUpsert(s: SparkSession, dir: String): DataFrame = {
     // explicit presence markers, not payload null-ness: branching on

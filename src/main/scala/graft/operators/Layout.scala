@@ -14,9 +14,8 @@ import org.apache.spark.sql.SparkSession
   *   2. re-lay to ceil(totalBytes / targetBytes) partitions — coalesce
   *      (narrow, no shuffle) when merging, round-robin repartition only
   *      when splitting oversized files,
-  *   3. write to a staging dir, then swap via rename-aside (the same
-  *      recoverable pattern as KvUpsertSink): live → `<dir>.old`,
-  *      staging → live, drop aside. A crash at any point leaves either the
+  *   3. write to a staging dir, then swap via rename-aside: live →
+  *      `<dir>.old`, staging → live, drop aside. A crash at any point leaves either the
   *      old or the new complete directory, never a mix; a crash BETWEEN the
   *      renames leaves only the aside copy, which the next compact() call
   *      restores before doing anything else.

@@ -240,158 +240,128 @@ final class TopicTableSink(path: String) extends Serializable {
   * partitioning-independent).
   *
   * MERGE semantics (streaming-incremental): a batch may carry an `op` column
-  * ('upsert' | 'delete'); absent means 'upsert'. Per cell the latest-ts op
-  * wins (tie: delete beats upsert, then max cell_value) — so a batch is the
-  * standard three-branch MERGE: new key inserts, existing key updates,
-  * 'delete' removes. Deletes persist as TOMBSTONES rather than dropping the
-  * row, which is what makes the fold incremental: any split of a batch
-  * stream into micro-batches converges to the same table (an older upsert
-  * arriving after a newer delete must still lose — without the tombstone
-  * the delete would be forgotten). `read()` filters tombstones out.
-  * (A compaction pass could drop tombstones older than a lateness bound;
-  * not needed at this table's scale.)
+  * ('upsert' | 'delete'); absent or NULL means 'upsert'. Per cell the
+  * latest-ts op wins (tie: delete beats upsert, then max cell_value) — so a
+  * batch is the standard three-branch MERGE: new key inserts, existing key
+  * updates, 'delete' removes. Deletes persist as TOMBSTONES rather than
+  * dropping the row, which is what makes the fold incremental: any split of
+  * a batch stream into micro-batches converges to the same table (an older
+  * upsert arriving after a newer delete must still lose — without the
+  * tombstone the delete would be forgotten). `read()` filters tombstones
+  * out; `compact` drops the ones no future arrival can need.
   *
-  * Scale posture: the table is laid out as `bucket=hash(rowkey)%N` parquet
-  * partitions. An upsert touches ONLY the buckets present in the batch:
-  * read-side partition pruning on `bucket`, merge, write the merged buckets
-  * to a staging dir, then a per-bucket rename-aside swap. Cost per
-  * micro-batch is O(touched buckets), not O(table) — the same shape as a
-  * Delta/Hudi MERGE or an HBase regionserver write path; untouched buckets'
-  * files are never rewritten (asserted in StreamJobsSpec).
+  * Scale posture: merge on read, as HBase does with its puts
+  * (HbaseWriter.scala:26-29). An upsert writes its batch as given into the
+  * hidden `_staging` directory and commits it with one rename to the next
+  * numbered delta directory `delta=<n>` (a partition directory, so the raw
+  * table also reads as plain parquet). It reads nothing of the table but one
+  * parquet footer, and never rewrites or deletes a committed file, so its
+  * cost is O(batch) whatever the table's size, and a concurrent `read` sees
+  * each batch whole or not at all. A crash before the rename leaves only the
+  * invisible staging directory, which the next upsert overwrites. Last write
+  * wins when the table is read ([[lastWriteWins]]), so a read merges every
+  * delta; `compact` folds them into one `delta=<n>-base`, and a read starts
+  * at the newest base.
   *
   * Every write, and the sink's own FileSystem handle, goes through
   * [[NioLocalFileSystem]] for `file:` paths, so a micro-batch starts no
   * child process; other schemes are untouched.
   */
-final class KvUpsertSink(path: String, numBuckets: Int = 16) extends Serializable {
+final class KvUpsertSink(path: String) extends Serializable {
   import org.apache.hadoop.fs.{FileSystem, Path}
-  import org.apache.spark.sql.types.StructType
-  import scala.jdk.CollectionConverters._
+  import org.apache.spark.sql.types.{DataType, StringType, StructType}
 
-  private def fileSystem(spark: SparkSession, base: Path): FileSystem =
+  private def base = new Path(path)
+
+  private def fileSystem(spark: SparkSession): FileSystem =
     FileSystem.get(base.toUri,
       NioLocalFileSystem.conf(spark.sparkContext.hadoopConfiguration))
-
-  private def withBucket(df: DataFrame): DataFrame =
-    df.withColumn("bucket", pmod(xxhash64(col("rowkey")), lit(numBuckets)).cast("int"))
 
   /** Normalize the op column so plain-put batches and MERGE batches share
     * one merge path. */
   private def withOp(df: DataFrame): DataFrame =
     if (df.columns.contains("op")) df else df.withColumn("op", lit("upsert"))
 
-  /** Heal a swap that died mid-flight: an `_aside_<k>` dir with no live
-    * `bucket=<k>` means the crash hit between moving the old bucket aside
-    * and moving the staging copy in — the aside copy is the surviving
-    * authority, restore it. If the live bucket exists the swap completed
-    * and the aside is garbage. '_'-prefixed dirs are invisible to parquet
-    * readers, so a crashed state never corrupts concurrent reads. */
-  private def recoverAsides(fs: FileSystem, base: Path): Unit =
-    if (fs.exists(base))
-      fs.listStatus(base).filter(_.getPath.getName.startsWith("_aside_")).foreach { st =>
-        val k = st.getPath.getName.stripPrefix("_aside_")
-        val dst = new Path(base, s"bucket=$k")
-        if (!fs.exists(dst)) {
-          if (!fs.rename(st.getPath, dst))
-            throw new java.io.IOException(
-              s"KvUpsertSink: recovery rename ${st.getPath} -> $dst failed")
-        } else fs.delete(st.getPath, true)
-      }
+  private def visible(p: Path) = !p.getName.startsWith("_") && !p.getName.startsWith(".")
 
-  /** Column names of one data file of the live table, read from its
-    * parquet footer on the driver (no Spark job); None if it has none. */
-  private def fileColumns(fs: FileSystem, base: Path): Option[Seq[String]] = {
+  /** A delta's number; -1 for a directory of an earlier layout
+    * (`bucket=<k>`), which sorts before every delta. */
+  private def seqNo(p: Path): Long =
+    p.getName.stripPrefix("delta=").stripSuffix("-base").toLongOption.getOrElse(-1L)
+
+  /** Every visible directory of the table, oldest first. */
+  private def dirs(fs: FileSystem): Seq[Path] =
+    if (!fs.exists(base)) Nil
+    else fs.listStatus(base).toSeq.filter(s => s.isDirectory && visible(s.getPath))
+      .map(_.getPath).sortBy(seqNo)
+
+  /** The deltas a read merges: the newest base and everything after it.
+    * Older directories are what a compaction folded and had not yet
+    * deleted when it stopped. */
+  private def live(all: Seq[Path]): Seq[Path] =
+    all.drop(all.lastIndexWhere(_.getName.endsWith("-base")) max 0)
+
+  private def next(all: Seq[Path]): Long = (0L +: all.map(seqNo)).max + 1
+
+  /** The Spark schema in the parquet footer of one data file of `deltas`,
+    * read on the driver (no Spark job), with `op` added if the file has
+    * none (a table written before the MERGE extension); None if there is
+    * no data file. */
+  private def schemaOf(fs: FileSystem, deltas: Seq[Path]): Option[StructType] = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
-    def visible(p: Path) = !p.getName.startsWith("_") && !p.getName.startsWith(".")
-    fs.listStatus(base).iterator.filter(d => d.isDirectory && visible(d.getPath))
-      .flatMap(d => fs.listStatus(d.getPath).iterator)
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+    deltas.iterator.flatMap(d => fs.listStatus(d).iterator)
       .find(f => f.isFile && visible(f.getPath) && f.getPath.getName.endsWith(".parquet"))
       .map { f =>
         val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, fs.getConf))
-        try r.getFooter.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSeq
+        val s = try DataType.fromJson(r.getFooter.getFileMetaData.getKeyValueMetaData
+          .get(ParquetReadSupport.SPARK_METADATA_KEY)).asInstanceOf[StructType]
         finally r.close()
+        if (s.fieldNames.contains("op")) s else s.add("op", StringType)
       }
   }
 
-  /** The live table read with the batch's schema, not parquet schema
-    * inference (one Spark job per upsert). A batch whose columns differ from
-    * the table's throws: the merge would otherwise rewrite the touched
-    * buckets from the batch alone and lose their cells. A table written
-    * before the MERGE extension has no `op` column; `withOp` supplies it. */
-  private def live(spark: SparkSession, fs: FileSystem, base: Path,
+  /** Writes `rows` into the hidden staging directory, overwriting what a
+    * crashed attempt left there, and commits them as directory `name` with
+    * one rename. */
+  private def commit(fs: FileSystem, rows: DataFrame, name: String): Unit = {
+    val staging = new Path(base, "_staging")
+    rows.write.options(NioLocalFileSystem.options).mode("overwrite").parquet(staging.toString)
+    if (!fs.rename(staging, new Path(base, name)))
+      throw new java.io.IOException(s"KvUpsertSink: rename $staging -> $name failed")
+  }
+
+  /** The winning row of every cell of `deltas`, read with `schema` (no
+    * inference job): latest ts, then op ASC so that a delete beats a
+    * same-instant upsert ('delete' < 'upsert'), then the largest
+    * cell_value. The order is total on the cell's columns, so the winner
+    * does not depend on partitioning or delta order, and a batch committed
+    * twice ties with itself. Tombstones are kept. */
+  private def lastWriteWins(spark: SparkSession, deltas: Seq[Path],
       schema: StructType): DataFrame = {
-    val want = schema.fieldNames.filterNot(_ == "bucket").toSet
-    val onDisk = fileColumns(fs, base).map(_.toSet)
-    onDisk.foreach { cols =>
-      if (cols + "op" != want)
-        throw new IllegalArgumentException(s"KvUpsertSink: batch columns " +
-          s"${want.toSeq.sorted.mkString(", ")} differ from table $path columns " +
-          s"${cols.toSeq.sorted.mkString(", ")}")
-    }
-    val read = StructType(schema.filter(f => f.name == "bucket" || onDisk.forall(_(f.name)))
-      .map(_.copy(nullable = true)))
-    withOp(spark.read.schema(read).parquet(path))
+    val w = Window.partitionBy(col("rowkey"), col("cf"), col("qualifier"))
+      .orderBy(col("ts").desc, col("op").asc, col("cell_value").desc)
+    spark.read.schema(schema).parquet(deltas.map(_.toString): _*)
+      .withColumn("op", coalesce(col("op"), lit("upsert")))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
+      .drop("rn")
   }
 
+  /** Appends `batch` as one new delta. A batch whose columns differ from
+    * the table's throws, and writes nothing. */
   def upsert(spark: SparkSession, batch: DataFrame): Unit = {
-    val base = new Path(path)
-    val fs = fileSystem(spark, base)
-    recoverAsides(fs, base)
-
-    val b = withBucket(withOp(batch)).cache()
-    try {
-      // the touched-bucket set is ≤ numBuckets ints — driver-safe to collect
-      val touched = b.select(col("bucket")).distinct()
-        .collect().map(_.getInt(0)).sorted
-      if (touched.isEmpty) return
-      // first write: the sink creates the table (O7 DDL-on-write)
-      val all =
-        if (!fs.exists(base)) b
-        else live(spark, fs, base, b.schema)
-          .filter(col("bucket").isin(touched.map(Integer.valueOf): _*))
-          .select(b.columns.map(col): _*).unionAll(b)
-      // latest op per cell; ts tie: 'delete' < 'upsert' so op ASC lets the
-      // delete win (a MERGE's delete branch dominates same-instant updates)
-      val w = Window.partitionBy(col("rowkey"), col("cf"), col("qualifier"))
-        .orderBy(col("ts").desc, col("op").asc, col("cell_value").desc)
-      val merged = all
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .drop("rn")
-      writeBuckets(fs, base, merged, touched)
-    } finally b.unpersist()
-    ()
-  }
-
-  /** Stage `rows` (already carrying a `bucket` column) and swap the
-    * `touched` buckets in via rename-aside. The old bucket is MOVED aside
-    * (not deleted), so every failure point leaves a recoverable state —
-    * before the second rename the aside copy survives (recoverAsides
-    * restores it); after, the new bucket is live. A failed rename still
-    * fails the caller (micro-batch retries from the checkpoint), but no
-    * state is lost at any point. A touched bucket with NO staged rows
-    * (compaction dropped everything in it) is removed the same
-    * recoverable way. Untouched buckets are neither read nor written. */
-  private def writeBuckets(fs: FileSystem, base: Path,
-      rows: DataFrame, touched: Array[Int]): Unit = {
-    val staging = new Path(base.toString + "_staging")
-    fs.delete(staging, true)
-    rows.write.options(NioLocalFileSystem.options).partitionBy("bucket")
-      .mode("overwrite").parquet(staging.toString)
-    fs.mkdirs(base)
-    touched.foreach { k =>
-      val src = new Path(staging, s"bucket=$k")
-      val dst = new Path(base, s"bucket=$k")
-      val aside = new Path(base, s"_aside_$k")
-      fs.delete(aside, true)
-      if (fs.exists(dst) && !fs.rename(dst, aside))
-        throw new java.io.IOException(s"KvUpsertSink: rename $dst -> $aside failed")
-      if (fs.exists(src) && !fs.rename(src, dst))
-        throw new java.io.IOException(s"KvUpsertSink: rename $src -> $dst failed")
-      fs.delete(aside, true)
+    val fs = fileSystem(spark)
+    val all = dirs(fs)
+    val b = withOp(batch)
+    schemaOf(fs, live(all)).foreach { s =>
+      if (s.fieldNames.toSet != b.columns.toSet)
+        throw new IllegalArgumentException(s"KvUpsertSink: batch columns " +
+          s"${b.columns.sorted.mkString(", ")} differ from table $path columns " +
+          s"${s.fieldNames.sorted.mkString(", ")}")
     }
-    fs.delete(staging, true)
+    commit(fs, b, s"delta=${next(all)}")
   }
 
   /** Tombstone COMPACTION — the maintenance pass the class doc promised.
@@ -406,41 +376,37 @@ final class KvUpsertSink(path: String, numBuckets: Int = 16) extends Serializabl
     * result-invariant under the stated contract, and `read()` is
     * byte-identical before/after (it filters tombstones anyway).
     *
-    * Cost is O(buckets containing droppable tombstones), via the same
-    * staged rename-aside swap as `upsert` — a crash mid-compaction
-    * recovers to either the compacted or the pre-compaction bucket, both
-    * correct. Pass the stream's watermark (event-time), not wall clock.
+    * The winners are taken BEFORE the tombstones drop, so an older upsert
+    * beneath a dropped tombstone is gone with it. They are committed as one
+    * `delta=<n>-base`, and then every older directory is deleted. A crash
+    * before the commit leaves the table as it was; after it, reads start at
+    * the base and ignore what is left to delete. A read that listed the
+    * deltas before the commit can fail once they are deleted. Pass the
+    * stream's watermark (event-time), not wall clock.
     */
   def compact(spark: SparkSession, watermark: java.sql.Timestamp): Unit = {
-    val base = new Path(path)
-    val fs = fileSystem(spark, base)
-    recoverAsides(fs, base)
-    if (!fs.exists(base)) return
-    val all = withOp(spark.read.parquet(path))
-    val droppable = col("op") === "delete" && col("ts") < lit(watermark)
-    // ≤ numBuckets ints — driver-safe, same shape as upsert's touched set
-    val touched = all.filter(droppable).select(col("bucket")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    if (touched.isEmpty) return
-    val kept = all
-      .filter(col("bucket").isin(touched.map(Integer.valueOf): _*))
+    val fs = fileSystem(spark)
+    val all = dirs(fs)
+    val deltas = live(all)
+    schemaOf(fs, deltas).foreach { s =>
+      val droppable = col("op") === "delete" && col("ts") < lit(watermark)
       // null-safe complement: a delete row with NULL ts makes `droppable`
       // NULL, and plain !droppable would silently drop it regardless of the
       // watermark bound — keep every row not PROVEN droppable
-      .filter(!(droppable <=> lit(true)))
-    writeBuckets(fs, base, kept, touched)
+      commit(fs, lastWriteWins(spark, deltas, s).filter(!(droppable <=> lit(true))),
+        s"delta=${next(all)}-base")
+      all.foreach(fs.delete(_, true))
+    }
   }
 
-  /** Read the live table: heal any crashed swap first (an `_aside_` bucket
-    * is invisible to the parquet reader — without recovery a read between
-    * the two renames of a died swap would silently miss that bucket), and
-    * normalize `op` so tables written before the MERGE extension still read.
-    */
+  /** The table as of the deltas committed when it is called: last write
+    * wins per cell, tombstones removed. */
   def read(spark: SparkSession): DataFrame = {
-    val base = new Path(path)
-    recoverAsides(fileSystem(spark, base), base)
-    withOp(spark.read.parquet(path))
-      .filter(col("op") =!= "delete").drop("bucket", "op")
+    val fs = fileSystem(spark)
+    val deltas = live(dirs(fs))
+    val schema = schemaOf(fs, deltas).getOrElse(
+      throw new IllegalStateException(s"KvUpsertSink: no table at $path"))
+    lastWriteWins(spark, deltas, schema).filter(col("op") =!= "delete").drop("op")
   }
 }
 

@@ -190,12 +190,12 @@ class PropertySpec extends SparkSpec {
     def state(s: KvUpsertSink) = s.read(spark)
       .select($"rowkey", $"cell_value").as[(String, String)].collect().toSet
     samples(opGen, 4).zipWithIndex.foreach { case (ops, i) =>
-      val oneShot = new KvUpsertSink(tmp() + "/kv", numBuckets = 4)
+      val oneShot = new KvUpsertSink(tmp() + "/kv")
       oneShot.upsert(spark, ops.toDF(cols: _*))
       // deterministic uneven split into 3 micro-batches (incl. ties
       // straddling the cuts — the case that breaks non-total orders)
       val (c1, c2) = (ops.size / 3 + i % 3, 2 * ops.size / 3)
-      val inc = new KvUpsertSink(tmp() + "/kv", numBuckets = 4)
+      val inc = new KvUpsertSink(tmp() + "/kv")
       Seq(ops.take(c1), ops.slice(c1, c2), ops.drop(c2))
         .filter(_.nonEmpty)
         .foreach(b => inc.upsert(spark, b.toDF(cols: _*)))

@@ -524,53 +524,99 @@ class StreamJobsSpec extends SparkSpec {
   }
 
   test("KvUpsertSink rewrites only the buckets touched by the batch") {
-    val path = tmp() + "/kv"
-    val sink = new KvUpsertSink(path, numBuckets = 8)
+    val cols = Seq("rowkey", "cf", "qualifier", "cell_value", "ts")
     def cell(rowkey: String, v: String, sec: Long) =
       (rowkey, "cf1", "q", v, new Timestamp(sec * 1000))
-    // seed: many rowkeys so several buckets exist
-    sink.upsert(spark, (1 to 64).map(i => cell(s"k$i", s"v$i", 100))
-      .toDF("rowkey", "cf", "qualifier", "cell_value", "ts"))
-    val bucketOf = spark.read.parquet(path)
-      .select($"rowkey", $"bucket".cast("int")).as[(String, Int)].collect().toMap
-    val touchedBucket = bucketOf("k1")
-    val untouched = bucketOf.values.find(_ != touchedBucket).get
-    def files(b: Int): Map[String, Long] = {
-      val d = new java.io.File(s"$path/bucket=$b")
-      d.listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getName -> f.lastModified()).toMap
+    def seed(n: Int) = (1 to n).map(i => cell(s"k$i", s"v$i", 100)).toDF(cols: _*)
+    // every file under the table: relative path -> (length, mtime)
+    def files(path: String): Map[String, (Long, Long)] = {
+      val root = java.nio.file.Paths.get(path)
+      java.nio.file.Files.walk(root).toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .filter(java.nio.file.Files.isRegularFile(_))
+        .map(p => root.relativize(p).toString -> (p.toFile.length, p.toFile.lastModified))
+        .toMap
     }
-    val before = files(untouched)
+    val path = tmp() + "/kv"
+    val sink = new KvUpsertSink(path)
+    sink.upsert(spark, seed(64))
+    val before = files(path)
     Thread.sleep(1100) // let mtime resolution tick over
-    // second upsert: only k1's bucket is touched
-    sink.upsert(spark, Seq(cell("k1", "v1-new", 200))
-      .toDF("rowkey", "cf", "qualifier", "cell_value", "ts"))
-    assert(files(untouched) === before) // untouched bucket files not rewritten
+    sink.upsert(spark, Seq(cell("k1", "v1-new", 200)).toDF(cols: _*))
+    val after = files(path)
+    // no file present before the upsert changed name, length or mtime
+    before.foreach { case (f, st) => assert(after.get(f) === Some(st), f) }
+    assert(after.size > before.size)
     // and the upsert semantics held: k1 now has the new value
     val k1 = sink.read(spark).filter($"rowkey" === "k1")
       .select($"cell_value").as[String].collect().toSeq
     assert(k1 === Seq("v1-new"))
     assert(sink.read(spark).count() === 64)
+
+    // O(batch) writes: one fixed upsert writes the same bytes into a table
+    // of S rows as into one of 10·S rows
+    def written(n: Int): Long = {
+      val p = tmp() + "/kv"
+      val s = new KvUpsertSink(p)
+      s.upsert(spark, seed(n))
+      val was = files(p)
+      s.upsert(spark, Seq(cell("k1", "v1-new", 200), cell("k2", "v2-new", 200))
+        .toDF(cols: _*))
+      (files(p) -- was.keySet).values.map(_._1).sum
+    }
+    val (atS, at10S) = (written(500), written(5000))
+    assert(atS > 0)
+    assert(atS === at10S)
   }
 
   test("KvUpsertSink.read heals a swap that died between the renames") {
+    val cols = Seq("rowkey", "cf", "qualifier", "cell_value", "ts")
     val path = tmp() + "/kv"
-    val sink = new KvUpsertSink(path, numBuckets = 8)
+    val sink = new KvUpsertSink(path)
     def cell(rowkey: String, v: String, sec: Long) =
       (rowkey, "cf1", "q", v, new Timestamp(sec * 1000))
-    sink.upsert(spark, (1 to 64).map(i => cell(s"k$i", s"v$i", 100))
-      .toDF("rowkey", "cf", "qualifier", "cell_value", "ts"))
-    val expected = sink.read(spark).count()
-    // simulate the crash window: a bucket moved aside, staging never landed.
-    // The '_'-prefixed aside is invisible to the parquet reader, so an
-    // unhealed read would silently drop this bucket's rows.
-    val b = new java.io.File(path).listFiles()
-      .filter(_.getName.startsWith("bucket=")).head
-    val k = b.getName.stripPrefix("bucket=")
-    assert(b.renameTo(new java.io.File(s"$path/_aside_$k")))
-    assert(sink.read(spark).count() === expected)
-    assert(new java.io.File(s"$path/bucket=$k").exists())
-    assert(!new java.io.File(s"$path/_aside_$k").exists())
+    def state() = sink.read(spark).select($"rowkey", $"cell_value")
+      .as[(String, String)].collect().toSet
+    sink.upsert(spark, (1 to 64).map(i => cell(s"k$i", s"v$i", 100)).toDF(cols: _*))
+    val expected = state()
+    assert(expected.size === 64)
+    // the crash: an upsert wrote its staging directory and died before the
+    // commit rename. Its newer cells would win every rowkey if read.
+    (1 to 64).map(i => cell(s"k$i", "crashed", 200)).toDF(cols: _*)
+      .withColumn("op", lit("upsert")).write.parquet(s"$path/_staging")
+    assert(state() === expected)
+    // the next upsert overwrites the staging directory and commits
+    sink.upsert(spark, Seq(cell("k1", "v1-new", 300)).toDF(cols: _*))
+    assert(state() === expected - ("k1" -> "v1") + ("k1" -> "v1-new"))
+    assert(!new java.io.File(s"$path/_staging").exists())
+  }
+
+  test("KvUpsertSink.read during upserts never fails and sees whole batches") {
+    import scala.jdk.CollectionConverters._
+    val cols = Seq("rowkey", "cf", "qualifier", "cell_value", "ts")
+    val sink = new KvUpsertSink(tmp() + "/kv")
+    val perBatch = 200
+    def batch(i: Int) = (0 until perBatch).map(j =>
+      (s"b$i-k$j", "cf1", "q", s"v$j", new Timestamp(1000L * i))).toDF(cols: _*)
+    sink.upsert(spark, batch(0))
+    val counts = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val reader = new Thread(() =>
+      while (!done.get) {
+        try counts.add(sink.read(spark).count())
+        catch { case e: Throwable => failures.add(e) }
+      })
+    reader.start()
+    try (1 until 20).foreach(i => sink.upsert(spark, batch(i)))
+    finally { done.set(true); reader.join() }
+    assert(failures.isEmpty, s"${failures.size} of ${failures.size + counts.size} " +
+      s"reads failed: ${failures.asScala.headOption}")
+    val seen = counts.asScala.toSeq
+    assert(seen.nonEmpty)
+    // each read saw whole batches, and never fewer than the read before it
+    assert(seen.forall(_ % perBatch == 0), seen)
+    assert(seen === seen.sorted, seen)
+    assert(sink.read(spark).count() === 20 * perBatch)
   }
 
   test("KvUpsertSink incremental MERGE: two micro-batches of mixed " +
@@ -592,7 +638,7 @@ class StreamJobsSpec extends SparkSpec {
     // incremental: stream the two micro-batches through foreachBatch
     val in = MemoryStream[(String, String, String, String, Timestamp, String)]
     val incPath = tmp() + "/kv_inc"
-    val incSink = new KvUpsertSink(incPath, numBuckets = 4)
+    val incSink = new KvUpsertSink(incPath)
     val q = in.toDF().toDF(cols: _*).writeStream
       .outputMode("append")
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -603,7 +649,7 @@ class StreamJobsSpec extends SparkSpec {
     graft.streaming.StreamQuiet.quietStop(q)
 
     // batch: all ops in one MERGE
-    val batchSink = new KvUpsertSink(tmp() + "/kv_batch", numBuckets = 4)
+    val batchSink = new KvUpsertSink(tmp() + "/kv_batch")
     batchSink.upsert(spark, (b1 ++ b2).toDF(cols: _*))
 
     def state(s: KvUpsertSink) = s.read(spark)
@@ -624,7 +670,7 @@ class StreamJobsSpec extends SparkSpec {
       (k, "cf1", "q", v, new Timestamp(sec * 1000), op)
     val cols = Seq("rowkey", "cf", "qualifier", "cell_value", "ts", "op")
     val path = tmp() + "/kv_compact"
-    val sink = new KvUpsertSink(path, numBuckets = 4)
+    val sink = new KvUpsertSink(path)
     sink.upsert(spark, Seq(
       mcell("a", "va", 100, "upsert"),
       mcell("b", "vb", 100, "upsert"),
@@ -651,6 +697,35 @@ class StreamJobsSpec extends SparkSpec {
 
     // idempotent: a second pass with the same watermark is a no-op
     sink.compact(spark, new Timestamp(500 * 1000))
+    assert(live() === Set("c" -> "vc"))
+  }
+
+  test("KvUpsertSink.compact that dies before deleting the deltas it " +
+      "folded leaves read() unchanged") {
+    def mcell(k: String, v: String, sec: Long, op: String) =
+      (k, "cf1", "q", v, new Timestamp(sec * 1000), op)
+    val cols = Seq("rowkey", "cf", "qualifier", "cell_value", "ts", "op")
+    val path = tmp() + "/kv"
+    val sink = new KvUpsertSink(path)
+    def live() = sink.read(spark)
+      .select($"rowkey", $"cell_value").as[(String, String)].collect().toSet
+    sink.upsert(spark, Seq(mcell("a", "va", 100, "upsert")).toDF(cols: _*))
+    sink.upsert(spark, Seq(mcell("a", null, 300, "delete"),
+      mcell("c", "vc", 100, "upsert")).toDF(cols: _*))
+    val first = new java.io.File(path).listFiles().filter(_.isDirectory)
+      .filterNot(_.getName.startsWith("_")).minBy(_.getName)
+    val copy = new java.io.File(tmp(), "folded")
+    org.apache.commons.io.FileUtils.copyDirectory(first, copy)
+    // drops a's tombstone, and the older upsert beneath it with it
+    sink.compact(spark, new Timestamp(500 * 1000))
+    assert(live() === Set("c" -> "vc"))
+    assert(!first.exists())
+    // the crash: the delta holding a's upsert was never deleted
+    org.apache.commons.io.FileUtils.copyDirectory(copy, first)
+    assert(live() === Set("c" -> "vc"))
+    // the next compaction deletes it
+    sink.compact(spark, new Timestamp(500 * 1000))
+    assert(!first.exists())
     assert(live() === Set("c" -> "vc"))
   }
 
@@ -737,7 +812,7 @@ class StreamJobsSpec extends SparkSpec {
     def cell(k: String, v: String, sec: Long) =
       (k, "cf1", "q", v, new Timestamp(sec * 1000))
     val path = tmp() + "/kv"
-    val sink = new KvUpsertSink(path, numBuckets = 4)
+    val sink = new KvUpsertSink(path)
     sink.upsert(spark, Seq(cell("k1", "v1", 100), cell("k2", "v2", 100))
       .toDF(cols: _*))
     def files() = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
@@ -758,7 +833,7 @@ class StreamJobsSpec extends SparkSpec {
     Seq(cell("k1", "v1", 100)).toDF(cols: _*)
       .withColumn("bucket", pmod(xxhash64($"rowkey"), lit(4)).cast("int"))
       .write.partitionBy("bucket").parquet(old)
-    val oldSink = new KvUpsertSink(old, numBuckets = 4)
+    val oldSink = new KvUpsertSink(old)
     oldSink.upsert(spark, Seq(cell("k1", "v0", 50)).toDF(cols: _*))
     assert(oldSink.read(spark).select($"cell_value").as[String].collect().toSeq
       === Seq("v1"))
@@ -797,16 +872,20 @@ class StreamJobsSpec extends SparkSpec {
         .toDF("topic", "key", "value", "ts")
       topic.appendBatch(line, 0)
       topic.appendBatch(line, 0) // a re-run batch overwrites its directory
-      val kv = new KvUpsertSink(dir + "/kv", numBuckets = 4)
+      val kv = new KvUpsertSink(dir + "/kv")
       val cols = Seq("rowkey", "cf", "qualifier", "cell_value", "ts")
       kv.upsert(spark, (1 to 8).map(i => (s"k$i", "cf1", "q", s"v$i",
         new Timestamp(1000L))).toDF(cols: _*))
       kv.upsert(spark, Seq(("k1", "cf1", "q", "v1b", new Timestamp(2000L)))
-        .toDF(cols: _*)) // reads the live table and swaps a bucket
+        .toDF(cols: _*)) // reads a footer of the table and commits a delta
+      kv.upsert(spark, Seq(("k8", "cf1", "q", null: String, new Timestamp(2000L),
+        "delete")).toDF(cols :+ "op": _*))
+      assert(kv.read(spark).count() === 7)
+      kv.compact(spark, new Timestamp(3000L)) // drops k8's tombstone
+      assert(kv.read(spark).count() === 7)
+      assert(topic.read(spark).count() === 1)
       drain()
       assert(started.isEmpty, started.asScala.mkString("\n"))
-      assert(topic.read(spark).count() === 1)
-      assert(kv.read(spark).count() === 8)
     } finally rs.close()
 
     val fs = new NioLocalFileSystem
