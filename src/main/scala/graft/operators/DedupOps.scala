@@ -50,19 +50,19 @@ object DedupOps extends QueryModule {
     docs(s, dir)
       .repartition(col("doc_id"))
       .withColumn("toks", split(col("text"), " "))
-      // <3 tokens → no 3-shingle. Without the guard, sequence(1, size-2)
-      // with size<3 runs DOWNWARD (Spark's default step -1 when start>stop),
-      // yielding index 0 → element_at error; DuckDB's generate_series(1,0)
-      // is just empty. Filtering matches the oracle's empty-list behavior.
+      // filtering matches the oracle's empty list for < 3 tokens
       .filter(size(col("toks")) >= 3)
-      .select(col("doc_id"),
-        explode(transform(
-          sequence(lit(1), size(col("toks")) - 2),
-          i => concat_ws(" ",
-            element_at(col("toks"), i),
-            element_at(col("toks"), i + 1),
-            element_at(col("toks"), i + 2)))).as("sh"))
+      .select(col("doc_id"), explode(shingles3(col("toks"))).as("sh"))
       .distinct()
+
+  /** The 3-token shingles of a token array, in order. Callers guard
+    * size(toks) >= 3: below it, sequence(1, size - 2) runs DOWNWARD (Spark's
+    * default step is -1 when start > stop) to index 0, an element_at error,
+    * where DuckDB's generate_series(1, 0) is just empty. */
+  private[graft] def shingles3(toks: Column): Column =
+    transform(sequence(lit(1), size(toks) - 2),
+      i => concat_ws(" ", element_at(toks, i), element_at(toks, i + 1),
+        element_at(toks, i + 2)))
 
   private[graft] val shinglesSql: String =
     """SELECT DISTINCT doc_id,
@@ -196,34 +196,74 @@ object DedupOps extends QueryModule {
        |GROUP BY doc_id""".stripMargin
   }
 
+  /** One row per (doc, band): the 4 bands × 4 rows of a [[minhashSig]]
+    * signature, each band's rows joined into its bucket key. */
+  private def lshBands(sig: DataFrame): DataFrame =
+    sig.select(col("doc_id"),
+      posexplode(array((0 until 4).map(bnd =>
+        concat_ws(":", (0 until 4).map(r => col(s"mh${bnd * 4 + r}")): _*)): _*))
+        .as(Seq("band", "key")))
+
+  /** The LSH blocking stage: the distinct (a_id < b_id) doc pairs that share
+    * a band bucket. */
+  private def lshCandidates(sig: DataFrame): DataFrame = {
+    val bands = lshBands(sig)
+    bands.as("x").join(bands.as("y"),
+        col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
+          col("x.doc_id") < col("y.doc_id"))
+      .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
+      .distinct()
+  }
+
+  /** Per-doc distinct-shingle count `n_sh`, the input of a Jaccard union. */
+  private def shingleCounts(sh: DataFrame): DataFrame =
+    sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
+
+  /** Exact shingle intersection `inter` of each candidate pair (ids `a`,
+    * `b`). Equi-join on (doc, shingle) both times: the intersection
+    * materializes directly — joining on doc alone and filtering sh == sh2
+    * would expand each pair to |sh_a|·|sh_b| rows first (quadratic). */
+  private def shingleOverlap(cand: DataFrame, sh: DataFrame,
+      a: String = "a_id", b: String = "b_id"): DataFrame =
+    cand
+      .join(sh.select(col("doc_id").as(a), col("sh")), a)
+      .join(sh.select(col("doc_id").as(b), col("sh")), Seq(b, "sh"))
+      .groupBy(col(a), col(b))
+      .agg(count(lit(1)).as("inter"))
+
+  /** `pairs` with each side's [[shingleCounts]]: `na` for a_id, `nb` for b_id. */
+  private def withPairCounts(pairs: DataFrame, sizes: DataFrame): DataFrame =
+    pairs
+      .join(sizes.withColumnRenamed("doc_id", "a_id").withColumnRenamed("n_sh", "na"), "a_id")
+      .join(sizes.withColumnRenamed("doc_id", "b_id").withColumnRenamed("n_sh", "nb"), "b_id")
+
+  /** The oracles' form of [[lshBands]]: four SELECTs over a `sig` CTE. */
+  private val bandSelectsSql: String = (0 until 4).map { bnd =>
+    val key = (0 until 4).map(r => s"mh${bnd * 4 + r}").mkString(", ")
+    s"SELECT doc_id, $bnd AS band, concat_ws(':', $key) AS key FROM sig"
+  }.mkString("\n  UNION ALL ")
+
+  /** The oracles' form of [[lshCandidates]]: `bands` and `cand` CTEs over a
+    * `sig` CTE. */
+  private val lshCandSql: String =
+    s"""bands AS (
+       |  $bandSelectsSql
+       |), cand AS (
+       |  SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id
+       |  FROM bands x JOIN bands y
+       |    ON x.band = y.band AND x.key = y.key AND x.doc_id < y.doc_id
+       |)""".stripMargin
+
   /** MinHash LSH near-dup pairs: 4 bands × 4 rows → same-bucket candidates →
     * exact Jaccard ≥ 0.3 verification. Unordered core, shared by the
     * registered query and the clustering stage downstream. */
   private def minhashLshCore(s: SparkSession, dir: String): DataFrame = {
     // cache: the signature subtree feeds both sides of the band self-join
     val sig = minhashSig(s, dir).cache()
-    val bands = sig.select(col("doc_id"),
-      posexplode(array((0 until 4).map(bnd =>
-        concat_ws(":", (0 until 4).map(r => col(s"mh${bnd * 4 + r}")): _*)): _*))
-        .as(Seq("band", "key")))
-    val cand = bands.as("x").join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
-      .distinct()
+    val cand = lshCandidates(sig)
     val sh = shingles(s, dir).cache()
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    // equi-join on (doc, shingle) both times: the intersection materializes
-    // directly — joining on doc alone and filtering sh==sh2 would expand each
-    // candidate pair to |sh_a|·|sh_b| rows first (quadratic per pair)
-    val inter = cand
-      .join(sh.select(col("doc_id").as("a_id"), col("sh")), "a_id")
-      .join(sh.select(col("doc_id").as("b_id"), col("sh")), Seq("b_id", "sh"))
-      .groupBy(col("a_id"), col("b_id"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "a_id").withColumnRenamed("n_sh", "na"), "a_id")
-      .join(sizes.withColumnRenamed("doc_id", "b_id").withColumnRenamed("n_sh", "nb"), "b_id")
+    val sizes = shingleCounts(sh)
+    withPairCounts(shingleOverlap(cand, sh), sizes)
       .withColumn("jaccard",
         col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
       .filter(col("jaccard") >= 0.3)
@@ -248,15 +288,7 @@ object DedupOps extends QueryModule {
     */
   private def minhashCalibration(s: SparkSession, dir: String): DataFrame = {
     val sig = minhashSig(s, dir).cache()
-    val bands = sig.select(col("doc_id"),
-      posexplode(array((0 until 4).map(bnd =>
-        concat_ws(":", (0 until 4).map(r => col(s"mh${bnd * 4 + r}")): _*)): _*))
-        .as(Seq("band", "key")))
-    val cand = bands.as("x").join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
-      .distinct()
+    val cand = lshCandidates(sig)
     val matchCnt = (0 until 16).map(j =>
       when(col(s"a_mh$j") === col(s"b_mh$j"), 1L).otherwise(0L))
       .reduce(_ + _)
@@ -265,19 +297,11 @@ object DedupOps extends QueryModule {
     val sigB = sig.select(col("doc_id").as("b_id") +:
       (0 until 16).map(j => col(s"mh$j").as(s"b_mh$j")): _*)
     val sh = shingles(s, dir).cache()
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    val inter = cand
-      .join(sh.select(col("doc_id").as("a_id"), col("sh")), "a_id")
-      .join(sh.select(col("doc_id").as("b_id"), col("sh")), Seq("b_id", "sh"))
-      .groupBy(col("a_id"), col("b_id"))
-      .agg(count(lit(1)).as("inter"))
-    val out = cand
-      .join(inter, Seq("a_id", "b_id"), "left")
-      .withColumn("inter", coalesce(col("inter"), lit(0L)))
-      .join(sizes.withColumnRenamed("doc_id", "a_id")
-        .withColumnRenamed("n_sh", "na"), "a_id")
-      .join(sizes.withColumnRenamed("doc_id", "b_id")
-        .withColumnRenamed("n_sh", "nb"), "b_id")
+    val sizes = shingleCounts(sh)
+    val inter = shingleOverlap(cand, sh)
+    val out = withPairCounts(cand
+        .join(inter, Seq("a_id", "b_id"), "left")
+        .withColumn("inter", coalesce(col("inter"), lit(0L))), sizes)
       .join(sigA, "a_id").join(sigB, "b_id")
       .withColumn("matches", matchCnt)
       .withColumn("uni", col("na") + col("nb") - col("inter"))
@@ -309,31 +333,18 @@ object DedupOps extends QueryModule {
     * queries build. */
   private def blockingQuality(s: SparkSession, dir: String): DataFrame = {
     val sh = shingles(s, dir).cache()
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
+    val sizes = shingleCounts(sh)
     val inter = sh.select(col("doc_id").as("a_id"), col("sh"))
       .join(sh.select(col("doc_id").as("b_id"), col("sh")), "sh")
       .filter(col("a_id") < col("b_id"))
       .groupBy(col("a_id"), col("b_id"))
       .agg(count(lit(1)).as("inter"))
-    val truth = inter
-      .join(sizes.withColumnRenamed("doc_id", "a_id")
-        .withColumnRenamed("n_sh", "na"), "a_id")
-      .join(sizes.withColumnRenamed("doc_id", "b_id")
-        .withColumnRenamed("n_sh", "nb"), "b_id")
+    val truth = withPairCounts(inter, sizes)
       .filter(expr("(inter * 1000) div (na + nb - inter) >= 500"))
       .select(col("a_id"), col("b_id"))
       .cache()
     val sig = minhashSig(s, dir).cache()
-    val bands = sig.select(col("doc_id"),
-      posexplode(array((0 until 4).map(bnd =>
-        concat_ws(":", (0 until 4).map(r => col(s"mh${bnd * 4 + r}")): _*)): _*))
-        .as(Seq("band", "key")))
-    val cand = bands.as("x").join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
-      .distinct()
-      .cache()
+    val cand = lshCandidates(sig).cache()
     val nTruth = truth.agg(count(lit(1)).as("n_truth"))
     val nCand = cand.agg(count(lit(1)).as("n_cand"))
     val nCaught = truth.join(cand, Seq("a_id", "b_id"), "left_semi")
@@ -357,11 +368,7 @@ object DedupOps extends QueryModule {
                 END""").as("reduction_ppm"))
   }
 
-  private def blockingQualitySql: String = {
-    val bandSelects = (0 until 4).map { bnd =>
-      val key = (0 until 4).map(r => s"mh${bnd * 4 + r}").mkString(", ")
-      s"SELECT doc_id, $bnd AS band, concat_ws(':', $key) AS key FROM sig"
-    }.mkString("\n  UNION ALL ")
+  private def blockingQualitySql: String =
     s"""WITH sh AS MATERIALIZED ($shinglesSql),
        |sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_sh FROM sh GROUP BY 1),
        |inter AS (
@@ -376,13 +383,7 @@ object DedupOps extends QueryModule {
        |  JOIN sizes sb ON sb.doc_id = i.b_id
        |  WHERE (i.inter * 1000) // (sa.n_sh + sb.n_sh - i.inter) >= 500
        |), sig AS ($minhashSigSql),
-       |bands AS (
-       |  $bandSelects
-       |), cand AS (
-       |  SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id
-       |  FROM bands x JOIN bands y
-       |    ON x.band = y.band AND x.key = y.key AND x.doc_id < y.doc_id
-       |), m AS (
+       |$lshCandSql, m AS (
        |  SELECT
        |    (SELECT CAST(COUNT(*) AS BIGINT) FROM documents) AS n_docs,
        |    (SELECT CAST(COUNT(*) AS BIGINT) FROM truth) AS n_truth,
@@ -398,7 +399,6 @@ object DedupOps extends QueryModule {
        |         1000000 - (n_cand * 1000000) // (n_docs * (n_docs - 1) // 2)
        |       END AS BIGINT) AS reduction_ppm
        |FROM m""".stripMargin
-  }
 
   /** Exact theoretical LSH catch probability at the decile midpoint
     * j = (2d+1)/20 for the 4-band × 4-row family: p = 1 − (1 − j⁴)⁴,
@@ -436,7 +436,7 @@ object DedupOps extends QueryModule {
   private def lshScurveEval(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val sh = shingles(s, dir).cache()
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
+    val sizes = shingleCounts(sh)
     val sRow = docs(s, dir).agg(count(lit(1)).as("nd"))
       .select(greatest(lit(1L), expr(s"nd div $SCURVE_TARGET")).as("samp"))
     val shT = sh.crossJoin(broadcast(sRow))
@@ -444,28 +444,17 @@ object DedupOps extends QueryModule {
         conv(substring(md5(col("doc_id").cast("string")), 1, 15), 16, 10)
           .cast("long"), col("samp")) === 0L)
       .select(col("doc_id"), col("sh"))
-    val truth = shT.select(col("doc_id").as("a_id"), col("sh"))
+    val inter = shT.select(col("doc_id").as("a_id"), col("sh"))
       .join(shT.select(col("doc_id").as("b_id"), col("sh")), "sh")
       .filter(col("a_id") < col("b_id"))
       .groupBy(col("a_id"), col("b_id"))
       .agg(count(lit(1)).as("inter"))
-      .join(sizes.withColumnRenamed("doc_id", "a_id")
-        .withColumnRenamed("n_sh", "na"), "a_id")
-      .join(sizes.withColumnRenamed("doc_id", "b_id")
-        .withColumnRenamed("n_sh", "nb"), "b_id")
+    val truth = withPairCounts(inter, sizes)
       .withColumn("decile", least(lit(9L),
         expr("(inter * 1000) div (na + nb - inter) div 100")))
       .select(col("a_id"), col("b_id"), col("decile"))
     val sig = minhashSig(s, dir).cache()
-    val bands = sig.select(col("doc_id"),
-      posexplode(array((0 until 4).map(bnd =>
-        concat_ws(":", (0 until 4).map(r => col(s"mh${bnd * 4 + r}")): _*)): _*))
-        .as(Seq("band", "key")))
-    val cand = bands.as("x").join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
-      .distinct()
+    val cand = lshCandidates(sig)
     val perDec = truth
       .join(cand.withColumn("_hit", lit(1L)), Seq("a_id", "b_id"), "left")
       .groupBy(col("decile"))
@@ -484,11 +473,7 @@ object DedupOps extends QueryModule {
       .orderBy(col("decile"))
   }
 
-  private def lshScurveEvalSql: String = {
-    val bandSelects = (0 until 4).map { bnd =>
-      val key = (0 until 4).map(r => s"mh${bnd * 4 + r}").mkString(", ")
-      s"SELECT doc_id, $bnd AS band, concat_ws(':', $key) AS key FROM sig"
-    }.mkString("\n  UNION ALL ")
+  private def lshScurveEvalSql: String =
     s"""WITH sh AS MATERIALIZED ($shinglesSql),
        |sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_sh FROM sh GROUP BY 1),
        |samp AS (
@@ -510,13 +495,7 @@ object DedupOps extends QueryModule {
        |  JOIN sizes sa ON sa.doc_id = i.a_id
        |  JOIN sizes sb ON sb.doc_id = i.b_id
        |), sig AS ($minhashSigSql),
-       |bands AS (
-       |  $bandSelects
-       |), cand AS (
-       |  SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id
-       |  FROM bands x JOIN bands y
-       |    ON x.band = y.band AND x.key = y.key AND x.doc_id < y.doc_id
-       |), per_dec AS (
+       |$lshCandSql, per_dec AS (
        |  SELECT t.decile, CAST(COUNT(*) AS BIGINT) AS n_true,
        |    CAST(SUM(CASE WHEN c.a_id IS NOT NULL THEN 1 ELSE 0 END)
        |         AS BIGINT) AS n_caught
@@ -551,23 +530,12 @@ object DedupOps extends QueryModule {
        |LEFT JOIN per_dec p USING (decile)
        |JOIN theo t USING (decile)
        |ORDER BY s.decile""".stripMargin
-  }
 
   private def minhashCalibrationSql: String = {
     val matchSum = (0 until 16).map(j =>
       s"CASE WHEN sa.mh$j = sb.mh$j THEN 1 ELSE 0 END").mkString(" + ")
-    val bandSelects = (0 until 4).map { bnd =>
-      val key = (0 until 4).map(r => s"mh${bnd * 4 + r}").mkString(", ")
-      s"SELECT doc_id, $bnd AS band, concat_ws(':', $key) AS key FROM sig"
-    }.mkString("\n  UNION ALL ")
     s"""WITH sig AS MATERIALIZED ($minhashSigSql),
-       |bands AS (
-       |  $bandSelects
-       |), cand AS (
-       |  SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id
-       |  FROM bands x JOIN bands y
-       |    ON x.band = y.band AND x.key = y.key AND x.doc_id < y.doc_id
-       |), sh AS MATERIALIZED ($shinglesSql),
+       |$lshCandSql, sh AS MATERIALIZED ($shinglesSql),
        |sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_sh FROM sh GROUP BY 1),
        |inter AS (
        |  SELECT c.a_id, c.b_id, CAST(COUNT(*) AS BIGINT) AS inter
@@ -612,11 +580,7 @@ object DedupOps extends QueryModule {
     */
   private def incrementalDedup(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sig = minhashSig(s, dir).cache()
-    val bands = sig.select(col("doc_id"),
-      posexplode(array((0 until 4).map(bnd =>
-        concat_ws(":", (0 until 4).map(r => col(s"mh${bnd * 4 + r}")): _*)): _*))
-        .as(Seq("band", "key")))
+    val bands = lshBands(minhashSig(s, dir).cache())
     val inc = bands.filter(col("doc_id") % 10 === 0)
       .select(col("doc_id").as("new_id"), col("band"), col("key"))
     val corpusIdx = bands.filter(col("doc_id") % 10 =!= 0)
@@ -624,13 +588,8 @@ object DedupOps extends QueryModule {
     val cand = inc.join(corpusIdx, Seq("band", "key"))
       .select(col("new_id"), col("old_id")).distinct()
     val sh = shingles(s, dir).cache()
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    val inter = cand
-      .join(sh.select(col("doc_id").as("new_id"), col("sh")), "new_id")
-      .join(sh.select(col("doc_id").as("old_id"), col("sh")), Seq("old_id", "sh"))
-      .groupBy(col("new_id"), col("old_id"))
-      .agg(count(lit(1)).as("inter"))
-    val verified = inter
+    val sizes = shingleCounts(sh)
+    val verified = shingleOverlap(cand, sh, "new_id", "old_id")
       .join(sizes.withColumnRenamed("doc_id", "new_id")
         .withColumnRenamed("n_sh", "nn"), "new_id")
       .join(sizes.withColumnRenamed("doc_id", "old_id")
@@ -651,14 +610,10 @@ object DedupOps extends QueryModule {
       .orderBy(col("new_id"))
   }
 
-  private def incrementalDedupSql: String = {
-    val bandSelects = (0 until 4).map { bnd =>
-      val key = (0 until 4).map(r => s"mh${bnd * 4 + r}").mkString(", ")
-      s"SELECT doc_id, $bnd AS band, concat_ws(':', $key) AS key FROM sig"
-    }.mkString("\n  UNION ALL ")
+  private def incrementalDedupSql: String =
     s"""WITH sig AS MATERIALIZED ($minhashSigSql),
        |bands AS (
-       |  $bandSelects
+       |  $bandSelectsSql
        |), cand AS (
        |  SELECT DISTINCT x.doc_id AS new_id, y.doc_id AS old_id
        |  FROM bands x JOIN bands y ON x.band = y.band AND x.key = y.key
@@ -690,108 +645,61 @@ object DedupOps extends QueryModule {
        |FROM documents d LEFT JOIN best b ON b.new_id = d.doc_id
        |WHERE d.doc_id % 10 = 0
        |ORDER BY new_id""".stripMargin
-  }
 
   /** Connected components of an undirected edge list (a_id, b_id) columns:
-    * min-label propagation iterated to a FIXPOINT — every node ends labeled
-    * with its component's minimum id, whatever the component diameter (the
-    * fixed-K unrolled form silently under-merged any chain longer than K).
-    *
-    * Each iteration is one equi-join (edges × labels) + one hash-aggregate,
-    * MATERIALIZED (cache + count) before the next: without that, each
-    * iteration's plan references the previous labels twice (via the
-    * neighbor join and the left join), so an uncached loop re-executes the
-    * base subtree 2^iters times — the round-3 plan-explosion bug (25.8 s for
-    * 3 unrolled iterations at sf0.1; materialized and converged: ~1 s).
-    *
-    * Scale posture (100 TB): the Pregel connected-components shape — state
-    * is one (node, label) row per distinct endpoint, per-iteration cost is
-    * one shuffle of the edge list, iteration count is the component
-    * diameter. The driver loop carries only the change COUNT (one long per
-    * iteration), never data. Termination is guaranteed: labels are a
-    * monotone non-increasing sequence over a finite domain.
+    * every node ends labeled with its component's minimum id, whatever the
+    * component diameter (the fixed-K unrolled form silently under-merged any
+    * chain longer than K). A node whose only pair is with itself is its own
+    * component.
     */
   private[graft] def connectedComponents(pairs0: DataFrame): DataFrame =
     connectedComponents(pairs0, smallGraphLimit = 1000000L)
 
-  /** @param smallGraphLimit edge-count threshold below which the component
-    *        labels are computed by a driver-side union-find instead of the
-    *        distributed loop. Labels are IDENTICAL either way (min id per
-    *        component); the fast path exists because the distributed
-    *        fixpoint pays ~2 Spark jobs per diameter step — pure scheduler
-    *        overhead when the deduplicated edge list is a few thousand rows
-    *        (the common case: near-dup graphs are far smaller than the
-    *        corpus). At 100 TB the edge list can still be huge → the
-    *        distributed loop remains the default above the threshold, and
-    *        1M edges ≈ 16 MB of longs is comfortably driver-safe below it.
+  /** @param smallGraphLimit edge count at or below which the labels come
+    *        from a driver-side union-find; above it, from the distributed
+    *        [[ccAlternatingStar]]. Labels are IDENTICAL either way; the fast
+    *        path exists because each distributed round pays several Spark
+    *        jobs — pure scheduler overhead when the deduplicated edge list is
+    *        a few thousand rows (the common case: near-dup graphs are far
+    *        smaller than the corpus). 1M edges ≈ 16 MB of longs is
+    *        comfortably driver-safe.
     */
   private[graft] def connectedComponents(
       pairs0: DataFrame, smallGraphLimit: Long): DataFrame = {
-    // cache the PAIRS, not just the union: the two unionAll branches are
-    // distinct logical subtrees, so without this the expensive pair-finding
-    // child executes once per branch (verified in the physical plan)
+    // cache: the count and then the collect (or the star path's edge set)
+    // read the expensive pair-finding child
     val pairs = pairs0.cache()
     val nEdges = pairs.count()
-    if (nEdges <= smallGraphLimit) {
-      val spark = pairs0.sparkSession
-      import spark.implicits._
-      val edges = pairs
-        .select(col("a_id").cast("long"), col("b_id").cast("long"))
-        .as[(Long, Long)].collect()
+    if (nEdges > smallGraphLimit) {
+      val labels = ccAlternatingStar(pairs)._1
+      // the star path has materialized its own edge set; without this every
+      // dedup query leaves the pairs pinned in storage for the JVM lifetime
       pairs.unpersist()
-      val parent = scala.collection.mutable.Map[Long, Long]()
-      // iterative find + path compression: a recursive find overflows the
-      // stack on path-shaped components (descending-id edge order builds an
-      // O(nodes) parent chain — well inside the 1M-edge envelope)
-      def find(x: Long): Long = {
-        var root = x
-        while (parent.getOrElseUpdate(root, root) != root) root = parent(root)
-        var cur = x
-        while (cur != root) { val next = parent(cur); parent(cur) = root; cur = next }
-        root
-      }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val labels = parent.keys.toSeq.map(v => (v, find(v)))
-      return labels.toDF("doc_id", "cluster")
+      return labels
     }
-    val und = pairs.select(col("a_id").as("u"), col("b_id").as("v"))
-      .unionAll(pairs.select(col("b_id").as("u"), col("a_id").as("v")))
-      .cache()
-    var labCached = und.select(col("u")).distinct()
-      .withColumn("lab", col("u")).cache()
-    var lab = labCached
-    var changed = 1L
-    while (changed > 0) {
-      val nbr = und.join(
-          lab.select(col("u").as("v"), col("lab").as("nb_lab")), "v")
-        .groupBy(col("u")).agg(min(col("nb_lab")).as("nlab"))
-      // rebase BEFORE caching: round i's plan references round i−1's twice
-      // (lab + nbr-from-lab), so without the lineage cut the LOGICAL plan —
-      // and every plan-string the listener bus renders — doubles per round:
-      // a diameter-64 chain built a 2^31-char (truncated) plan string and
-      // OOM'd the driver on heap while the DATA was 67 rows. Same class as
-      // kcore_peel's round-7 fix; the cache below still bounds recompute.
-      val stepped = graft.QOps.rebase(
-          lab.join(nbr, Seq("u"), "left")
-            .select(col("u"), col("lab"),
-              least(col("lab"), coalesce(col("nlab"), col("lab"))).as("new_lab")))
-        .cache()
-      // one action materializes the iteration AND measures convergence
-      changed = stepped.filter(col("new_lab") < col("lab")).count()
-      labCached.unpersist()
-      labCached = stepped
-      lab = stepped.select(col("u"), col("new_lab").as("lab"))
-    }
-    // the converged labels are fully materialized in labCached's cache, so
-    // the inputs can be released now — only the final cache must outlive
-    // this call (consumers re-read it; without these, every dedup query
-    // leaves pairs+edges pinned in storage for the JVM lifetime)
-    und.unpersist()
+    val spark = pairs0.sparkSession
+    import spark.implicits._
+    val edges = pairs
+      .select(col("a_id").cast("long"), col("b_id").cast("long"))
+      .as[(Long, Long)].collect()
     pairs.unpersist()
-    lab.select(col("u").as("doc_id"), col("lab").as("cluster"))
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    // iterative find + path compression: a recursive find overflows the
+    // stack on path-shaped components (descending-id edge order builds an
+    // O(nodes) parent chain — well inside the 1M-edge envelope)
+    def find(x: Long): Long = {
+      var root = x
+      while (parent.getOrElseUpdate(root, root) != root) root = parent(root)
+      var cur = x
+      while (cur != root) { val next = parent(cur); parent(cur) = root; cur = next }
+      root
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val labels = parent.keys.toSeq.map(v => (v, find(v)))
+    labels.toDF("doc_id", "cluster")
   }
 
   /** Near-dup CLUSTERS from the LSH pairs via [[connectedComponents]]. */
@@ -802,11 +710,11 @@ object DedupOps extends QueryModule {
 
   /** Connected components by ALTERNATING large-star / small-star rounds
     * (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    * the O(log n)-round algorithm, vs the O(diameter) rounds of
-    * [[connectedComponents]]'s min-label fixpoint. On a 100 TB pair graph
-    * whose duplicate families chain (the common near-dup topology: A≈B≈C≈…),
-    * diameter can reach thousands while log₂(n) stays ~40 — this is the
-    * scale path, kept VALUE-IDENTICAL to the fixpoint (every node labeled
+    * the O(log n)-round algorithm, where min-label propagation needs
+    * O(diameter) rounds. On a 100 TB pair graph whose duplicate families
+    * chain (the common near-dup topology: A≈B≈C≈…), diameter can reach
+    * thousands while log₂(n) stays ~40 — this is [[connectedComponents]]'s
+    * distributed path, VALUE-IDENTICAL to its union-find (every node labeled
     * with its component's min id; the oracle is the same recursive
     * reachability the dedup_clusters query uses, and PipelineOpsSpec pins
     * equality + the round advantage on an adversarial 64-chain).
@@ -819,11 +727,14 @@ object DedupOps extends QueryModule {
     */
   private[graft] def ccAlternatingStar(
       pairs: DataFrame, maxRounds: Int = 50): (DataFrame, Int) = {
-    var e = pairs
+    // self-pairs stay in the node set (a node whose only pair is with itself
+    // is its own component) and leave only the edge set the rounds work on
+    val edges = pairs
       .select(col("a_id").cast("long").as("u"), col("b_id").cast("long").as("v"))
-      .filter(col("u") =!= col("v")).distinct().cache()
-    val allNodes = e.select(col("u")).unionAll(e.select(col("v").as("u")))
       .distinct().cache()
+    val allNodes = edges.select(col("u")).unionAll(edges.select(col("v").as("u")))
+      .distinct()
+    var e = edges.filter(col("u") =!= col("v"))
     var n = e.count()
     var rounds = 0
     var stable = n == 0L
@@ -848,6 +759,7 @@ object DedupOps extends QueryModule {
       val next = graft.QOps.rebase(small).cache()
       val nNext = next.count()
       stable = nNext == n && next.exceptAll(e).isEmpty
+      // a no-op in round 1, whose e is a view of the still-needed edges
       e.unpersist()
       e = next
       n = nNext
@@ -971,28 +883,12 @@ object DedupOps extends QueryModule {
     */
   private def jaccardHistogram(s: SparkSession, dir: String): DataFrame = {
     val sig = minhashSig(s, dir).cache()
-    val bands = sig.select(col("doc_id"),
-      posexplode(array((0 until 4).map(bnd =>
-        concat_ws(":", (0 until 4).map(r => col(s"mh${bnd * 4 + r}")): _*)): _*))
-        .as(Seq("band", "key")))
-    val cand = bands.as("x").join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
-      .distinct()
+    val cand = lshCandidates(sig)
     val sh = shingles(s, dir).cache()
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    val inter = cand
-      .join(sh.select(col("doc_id").as("a_id"), col("sh")), "a_id")
-      .join(sh.select(col("doc_id").as("b_id"), col("sh")), Seq("b_id", "sh"))
-      .groupBy(col("a_id"), col("b_id"))
-      .agg(count(lit(1)).as("inter"))
-    cand.join(inter, Seq("a_id", "b_id"), "left")
-      .withColumn("inter", coalesce(col("inter"), lit(0L)))
-      .join(sizes.withColumnRenamed("doc_id", "a_id")
-        .withColumnRenamed("n_sh", "na"), "a_id")
-      .join(sizes.withColumnRenamed("doc_id", "b_id")
-        .withColumnRenamed("n_sh", "nb"), "b_id")
+    val sizes = shingleCounts(sh)
+    val inter = shingleOverlap(cand, sh)
+    withPairCounts(cand.join(inter, Seq("a_id", "b_id"), "left")
+        .withColumn("inter", coalesce(col("inter"), lit(0L))), sizes)
       .withColumn("jac_milli", expr("(inter * 1000) div (na + nb - inter)"))
       .withColumn("band_lo_milli", expr("(jac_milli div 50) * 50"))
       .groupBy(col("band_lo_milli"))
@@ -1000,19 +896,9 @@ object DedupOps extends QueryModule {
       .orderBy(col("band_lo_milli"))
   }
 
-  private def jaccardHistogramSql: String = {
-    val bandSelects = (0 until 4).map { bnd =>
-      val key = (0 until 4).map(r => s"mh${bnd * 4 + r}").mkString(", ")
-      s"SELECT doc_id, $bnd AS band, concat_ws(':', $key) AS key FROM sig"
-    }.mkString("\n  UNION ALL ")
+  private def jaccardHistogramSql: String =
     s"""WITH sig AS MATERIALIZED ($minhashSigSql),
-       |bands AS (
-       |  $bandSelects
-       |), cand AS (
-       |  SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id
-       |  FROM bands x JOIN bands y
-       |    ON x.band = y.band AND x.key = y.key AND x.doc_id < y.doc_id
-       |), sh AS MATERIALIZED ($shinglesSql),
+       |$lshCandSql, sh AS MATERIALIZED ($shinglesSql),
        |sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_sh FROM sh GROUP BY 1),
        |inter AS (
        |  SELECT c.a_id, c.b_id, CAST(COUNT(*) AS BIGINT) AS inter
@@ -1031,7 +917,6 @@ object DedupOps extends QueryModule {
        |)
        |SELECT band_lo_milli, CAST(COUNT(*) AS BIGINT) AS n_pairs
        |FROM jac GROUP BY 1 ORDER BY band_lo_milli""".stripMargin
-  }
 
   /** Cross-source duplication matrix — "which crawls duplicate which":
     * verified near-dup pairs rolled up by the (unordered) source pair of
@@ -1064,9 +949,9 @@ object DedupOps extends QueryModule {
        |GROUP BY 1, 2 ORDER BY src_a, src_b""".stripMargin
 
   /** Oracle: true connected components via recursive reachability — every
-    * label a node can reach, min per node. Matches the Spark fixpoint at any
-    * diameter (the old unrolled-K oracle could only ever agree with an
-    * equally-unrolled Spark plan). */
+    * label a node can reach, min per node. Matches [[connectedComponents]]
+    * (union-find or alternating star) at any diameter (the old unrolled-K
+    * oracle could only ever agree with an equally-unrolled Spark plan). */
   private def dedupClustersSql: String =
     s"""WITH RECURSIVE pairs AS MATERIALIZED (
        |  SELECT a_id, b_id FROM ($minhashLshSql)
@@ -1082,19 +967,9 @@ object DedupOps extends QueryModule {
        |SELECT u AS doc_id, MIN(lab) AS cluster FROM reach
        |GROUP BY u ORDER BY doc_id""".stripMargin
 
-  private def minhashLshSql: String = {
-    val bandSelects = (0 until 4).map { bnd =>
-      val key = (0 until 4).map(r => s"mh${bnd * 4 + r}").mkString(", ")
-      s"SELECT doc_id, $bnd AS band, concat_ws(':', $key) AS key FROM sig"
-    }.mkString("\n  UNION ALL ")
+  private def minhashLshSql: String =
     s"""WITH sig AS MATERIALIZED ($minhashSigSql),
-       |bands AS (
-       |  $bandSelects
-       |), cand AS (
-       |  SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id
-       |  FROM bands x JOIN bands y
-       |    ON x.band = y.band AND x.key = y.key AND x.doc_id < y.doc_id
-       |), sh AS MATERIALIZED ($shinglesSql),
+       |$lshCandSql, sh AS MATERIALIZED ($shinglesSql),
        |sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
        |inter AS (
        |  SELECT c.a_id, c.b_id, COUNT(*) AS inter
@@ -1110,7 +985,6 @@ object DedupOps extends QueryModule {
        |JOIN sizes sb ON sb.doc_id = i.b_id
        |WHERE i.inter * 1.0 / (sa.n_sh + sb.n_sh - i.inter) >= 0.3
        |ORDER BY a_id, b_id""".stripMargin
-  }
 
   /** End-to-end dedup pipeline output: for every near-dup CLUSTER, the
     * member that survives — not keep-min-id but keep-BEST, argmax of the

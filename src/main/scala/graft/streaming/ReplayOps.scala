@@ -1182,11 +1182,7 @@ object ReplayOps extends QueryModule {
     val bench = docs.filter(col("doc_id") < 10)
       .withColumn("toks", split(col("text"), " "))
       .select(explode(when(size(col("toks")) >= 3,
-        transform(sequence(lit(1), size(col("toks")) - 2),
-          i => concat_ws(" ",
-            element_at(col("toks"), i),
-            element_at(col("toks"), i + 1),
-            element_at(col("toks"), i + 2))))
+        graft.operators.DedupOps.shingles3(col("toks")))
         .otherwise(array())).as("sh"))
       .distinct()
     val corpus = docs.filter(col("doc_id") >= 10)

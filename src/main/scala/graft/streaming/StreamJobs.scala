@@ -1293,11 +1293,7 @@ object StreamJobs {
       .withColumn("toks", split(col("text"), " "))
       .select(col("docId"), col("ts"),
         explode(when(size(col("toks")) >= 3,
-          transform(sequence(lit(1), size(col("toks")) - 2),
-            i => concat_ws(" ",
-              element_at(col("toks"), i),
-              element_at(col("toks"), i + 1),
-              element_at(col("toks"), i + 2))))
+          graft.operators.DedupOps.shingles3(col("toks")))
           .otherwise(array())).as("sh"))
       .filter(call_function("bloom_might_contain", lit(bloom), col("sh")))
       .join(broadcast(benchSh), Seq("sh"), "left_semi")

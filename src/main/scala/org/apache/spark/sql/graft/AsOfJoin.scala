@@ -16,13 +16,16 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
   * "time" tuple is <= the left row's — the point-in-time lookup behind
   * feature stores, slowly-changing enrichment, and tick-data joins.
   *
-  * Spark has no as-of join; the expressible fallbacks are (a) the
-  * window formulation — union/self-join the right side into the left and
-  * carry `last(value, ignoreNulls)` over an unbounded-preceding window,
-  * which shuffles BOTH tables into one partition-per-key sort and
-  * materializes every row through WindowExec — or (b) a range join, which
-  * explodes to a pair blowup before a per-left argmax. This operator is the
-  * plan a database would pick:
+  * Spark 4.1's own `Dataset.joinAsOf` does not serve here: it takes ONE
+  * as-of column per side, so the callers' `(ts, id)` carry order has no
+  * native form, and its equality keys never match NULL (this operator's
+  * default is `matchNullKeys = true`, below). The other expressible
+  * fallbacks are (a) the window formulation — union/self-join the right
+  * side into the left and carry `last(value, ignoreNulls)` over an
+  * unbounded-preceding window, which shuffles BOTH tables into one
+  * partition-per-key sort and materializes every row through WindowExec —
+  * or (b) a range join, which explodes to a pair blowup before a per-left
+  * argmax. This operator is the plan a database would pick:
   *
   *   1. hash exchange both sides on the join key (EnsureRequirements
   *      inserts it from requiredChildDistribution, same as SortMergeJoin);

@@ -492,20 +492,22 @@ class PipelineOpsSpec extends SparkSpec {
   test("connectedComponents converges past diameter 3 (chain + forest)") {
     // a diameter-16 path (long enough that the per-round lineage REBASE is
     // load-bearing — unrebased, plan strings double per round and a long
-    // chain OOMs the driver), a disjoint triangle, and an isolated edge;
-    // the fixed-K=3 unrolled form mislabeled exactly this path shape
+    // chain OOMs the driver), a disjoint triangle, an isolated edge, and a
+    // node whose only pair is with itself; the fixed-K=3 unrolled form
+    // mislabeled exactly this path shape
     val edges = ((10 until 26).map(i => (i.toLong, i + 1L)) ++ Seq(
       (20L, 21L), (21L, 22L), (20L, 22L),
-      (30L, 31L)).map { case (a, b) => (a + 90L, b + 90L) })
+      (30L, 31L), (40L, 40L)).map { case (a, b) => (a + 90L, b + 90L) })
       .toDF("a_id", "b_id")
-    // smallGraphLimit = 0 forces the DISTRIBUTED fixpoint loop (the default
-    // would take the driver union-find fast path on these few edges)
+    // smallGraphLimit = 0 forces the DISTRIBUTED alternating-star path (the
+    // default would take the driver union-find fast path on these few edges)
     val got = graft.operators.DedupOps.connectedComponents(edges, 0L)
       .as[(Long, Long)].collect().toMap
     (10L to 26L).foreach(v => assert(got(v) === 10L, s"chain node $v"))
     (110L to 112L).foreach(v => assert(got(v) === 110L))
     assert(got(120L) === 120L && got(121L) === 120L)
-    assert(got.size === 22)
+    assert(got(130L) === 130L)
+    assert(got.size === 23)
     // and the fast path must produce the identical labeling
     val fast = graft.operators.DedupOps.connectedComponents(edges, 1000000L)
       .as[(Long, Long)].collect().toMap
@@ -515,22 +517,22 @@ class PipelineOpsSpec extends SparkSpec {
   test("ccAlternatingStar equals the min-label fixpoint on an adversarial " +
       "64-chain, in far fewer rounds than the diameter") {
     // a path of diameter 64 (the chained near-dup topology), a triangle,
-    // and an isolated edge — min-label propagation needs ~64 rounds here;
-    // alternating star must converge logarithmically
+    // an isolated edge, and a node whose only pair is with itself —
+    // min-label propagation needs ~64 rounds here; alternating star must
+    // converge logarithmically
     val chain = (0 until 64).map(i => (100L + i, 101L + i))
-    val edges = (chain ++ Seq((20L, 21L), (21L, 22L), (20L, 22L), (30L, 31L)))
+    val edges = (chain ++ Seq((20L, 21L), (21L, 22L), (20L, 22L), (30L, 31L),
+        (40L, 40L)))
       .toDF("a_id", "b_id")
     val (labels, rounds) = graft.operators.DedupOps.ccAlternatingStar(edges)
     val got = labels.as[(Long, Long)].collect().toMap
     (100L to 164L).foreach(v => assert(got(v) === 100L, s"chain node $v"))
     (20L to 22L).foreach(v => assert(got(v) === 20L))
     assert(got(30L) === 30L && got(31L) === 30L)
-    assert(got.size === 70)
+    assert(got(40L) === 40L)
+    assert(got.size === 71)
     assert(rounds <= 12, s"expected O(log n) rounds, took $rounds")
-    // and identical to the exact union-find labeling (the diameter-6 test
-    // above already pins the distributed fixpoint against the same fast
-    // path; running the fixpoint's 64 rounds here would only re-prove that
-    // slowly)
+    // and identical to the exact union-find labeling
     val fix = graft.operators.DedupOps.connectedComponents(edges, 1000000L)
       .as[(Long, Long)].collect().toMap
     assert(got === fix)

@@ -89,6 +89,20 @@ class PlanShapeSpec extends SparkSpec {
     assert(unsetting === Seq("GraftSession.scala:withConf"))
   }
 
+  test("the MinHash family builds each LSH stage in one member, and " +
+      "connected components has one distributed algorithm") {
+    val dedup = java.nio.file.Paths.get("src/main/scala/graft/operators/DedupOps.scala")
+    assert(membersContaining(dedup, "posexplode(array((0 until 4)") === Seq("lshBands"))
+    assert(membersContaining(dedup, "col(\"x.band\") === col(\"y.band\")") ===
+      Seq("lshCandidates"))
+    assert(membersContaining(dedup, ".as(\"n_sh\")") === Seq("shingleCounts"))
+    assert(membersContaining(dedup, "AS band, concat_ws(':'") === Seq("bandSelectsSql"))
+    assert(membersContaining(dedup,
+      "ON x.band = y.band AND x.key = y.key AND x.doc_id < y.doc_id") ===
+      Seq("lshCandSql"))
+    assert(membersContaining(dedup, "while (changed > 0)") === Seq())
+  }
+
   test("kmv_distinct k-smallest is heap-bounded BEFORE the shuffle") {
     // the aggregate-over-rank idiom rewritten into the bounded-heap
     // TopKPerKey: the shuffle carries at most k rows per group per input
