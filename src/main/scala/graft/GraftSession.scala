@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.streaming.NioCheckpointFileManager
 
 /** The one place a Spark session is built: every main and the test suites
   * get the same engine, so a plan or a timing means the same thing
@@ -10,6 +11,9 @@ import org.apache.spark.sql.SparkSession
   *   - UTC session zone, UI off, log level WARN
   *   - int64-µs parquet timestamps, so the DuckDB oracle reads our parquet
   *     as bit-identical values to its own output (no INT96 ambiguity)
+  *   - streaming checkpoints through [[NioCheckpointFileManager]], which
+  *     starts no child process on `file:` (the `StreamJobs` pipelines also
+  *     pin it at their start, whatever session they are given)
   *   - the engine extensions: the row_number top-k rewrite, the TopKPerKey
   *     and AsOfJoin strategies ([[org.apache.spark.sql.graft.RowNumberTopKRewrite.install]])
   */
@@ -22,6 +26,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      .config(NioCheckpointFileManager.pin._1, NioCheckpointFileManager.pin._2)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     org.apache.spark.sql.graft.RowNumberTopKRewrite.install(spark)

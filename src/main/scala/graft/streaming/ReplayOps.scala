@@ -86,27 +86,18 @@ object ReplayOps extends QueryModule {
     *    fixed overhead here, because every replay that needs a
     *    post-watermark batch feeds a DATA batch (the second sentinel) to
     *    provide it. The two replays that need them pin [[NoData]].
-    *  - The FileSystem-based checkpoint manager (round 12, measured by
-    *    thread-sampling a bench replay). The default FileContext-based
-    *    manager renames every finished checkpoint file through Hadoop's
-    *    AbstractFileSystem, whose local-FS rename calls
-    *    `FileUtil.readLink` — a fork/exec of the `readlink` SHELL COMMAND
-    *    per file. A replay commits hundreds of checkpoint files (offset/
-    *    commit logs + state deltas × partitions × batches), so the fork
-    *    storm dominated replay wall time on the 32-core sandbox. The
-    *    FileSystem-based manager renames via `File.renameTo` (atomic on
-    *    POSIX local filesystems — exactly where replays run; a production
-    *    checkpoint on HDFS/S3 keeps the default).
+    *  - No checkpoint-manager pin: the session's manager applies, which
+    *    `GraftSession` sets to [[NioCheckpointFileManager]] (no child process
+    *    per checkpoint file; round 12 measured the default manager's
+    *    per-rename `readlink` fork dominating replay wall time).
     *  - Checkpoint checksums off. Spark 4.1's checkpoint file-checksum
     *    layer writes a second `.crc`-style sidecar per checkpoint file
-    *    through the same rename path — doubling the fork count for scratch
-    *    files that live seconds. Outside the replay scope it stays on: it
-    *    is there to detect corruption. */
+    *    through the same rename path — doubling the checkpoint writes for
+    *    scratch files that live seconds. Outside the replay scope it stays
+    *    on: it is there to detect corruption. */
   private val ReplayConf: Seq[(String, String)] = Seq(
     "spark.sql.shuffle.partitions" -> "2",
     NoDataKey -> "false",
-    "spark.sql.streaming.checkpointFileManagerClass" ->
-      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager",
     "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false")
 
   /** Extra pin for the replays whose result depends on no-data batches. */

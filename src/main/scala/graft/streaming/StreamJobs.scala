@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, ForeachWriter, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 /** The Kafka wire schema (FIXTURES.md §B) — what
   * `spark.readStream.format("kafka")` yields and what the reference consumed
@@ -418,6 +418,58 @@ final class KvUpsertSink(path: String) extends Serializable {
   */
 object StreamJobs {
 
+  /** Starts `writer`, a stream of `input`, checkpointed at `checkpoint` when
+    * given, with [[NioCheckpointFileManager]] and `pins` set on the session.
+    * The query's `StreamExecution` clones the session when it is built and
+    * builds its offset and commit logs from the clone, so the pins hold for
+    * the query's life while the caller's conf is put back when `start`
+    * returns. */
+  private def start(input: DataFrame, writer: DataStreamWriter[Row],
+      checkpoint: Option[String], pins: (String, String)*): StreamingQuery = {
+    checkpoint.foreach(writer.option("checkpointLocation", _))
+    graft.GraftSession.withConf(input.sparkSession,
+      NioCheckpointFileManager.pin +: pins: _*)(writer.start())
+  }
+
+  /** The summary batch's pins.
+    *  - AQE off: the batch has no join, and its one shuffle feeds a cache
+    *    whose partitioning AQE leaves as it is, so AQE would only run each
+    *    shuffle stage as a job of its own.
+    *  - Auto bucketed scan and AQE's final-stage shuffle optimizations off:
+    *    while either is on, Spark's `CacheManager` plans every `cache()` in
+    *    a new clone of the session, one per batch here. The batch reads no
+    *    bucketed table and runs no AQE, so neither setting changes its plan.
+    *    With AQE on, each clone stayed reachable (one more live session per
+    *    batch); with AQE off, each is collected, and Spark's cleanup of its
+    *    artifact directory runs `rm -rf` in a new process. */
+  private val SummaryPins = Seq(
+    "spark.sql.adaptive.enabled" -> "false",
+    "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false",
+    "spark.sql.adaptive.applyFinalStageShuffleOptimizations" -> "false")
+
+  /** Runs `body` on a new thread, which inherits this thread's Spark local
+    * properties (the streaming batch id, the query's job group), so its jobs
+    * count under the running batch and are cancelled with the query. A
+    * pooled thread would carry those of the batch that created it. */
+  private final class Forked(body: => Unit) {
+    @volatile private var failure: Throwable = null
+    private val thread = new Thread(() => try body catch { case e: Throwable => failure = e },
+      "graft-forked-write")
+    thread.setDaemon(true)
+    thread.start()
+
+    /** Waits for `body` to finish, through interrupts (a stopped query
+      * interrupts its batch thread; the interrupt is set again afterwards),
+      * so the write never outlives its batch, and returns what it threw. */
+    def join(): Option[Throwable] = {
+      var interrupted = false
+      while (thread.isAlive)
+        try thread.join() catch { case _: InterruptedException => interrupted = true }
+      if (interrupted) Thread.currentThread().interrupt()
+      Option(failure)
+    }
+  }
+
   /** ≈ Streamer.main (Streamer.scala:120-202): per micro-batch, compute the
     * record count and distinct messages, emit one formatted summary line to
     * the topic table, upsert the summary cell, and bulk-write distinct
@@ -428,7 +480,10 @@ object StreamJobs {
     * One pass over the batch's records: a per-key aggregate (record count,
     * max event time, max bulk cell value) is the only thing cached, O(distinct
     * keys), not O(batch). The count, the batch time and the bulk cells all
-    * come from it.
+    * come from it. A batch runs three Spark jobs, with AQE off ([[SummaryPins]]):
+    * the aggregate with the count, the topic line and the KV upsert. The
+    * last two run at the same time; the batch fails, after both have
+    * finished, if either does, and its re-run rewrites both.
     */
   def summaryPipeline(
       input: DataFrame,
@@ -438,11 +493,9 @@ object StreamJobs {
       kvSink: KvUpsertSink,
       trigger: Trigger = Trigger.AvailableNow(),
       checkpoint: Option[String] = None): StreamingQuery = {
-    val base = input.writeStream
+    val writer = input.writeStream
       .trigger(trigger)
       .outputMode("append")
-    checkpoint.foreach(base.option("checkpointLocation", _))
-    base
       .foreachBatch { (df: DataFrame, batchId: Long) =>
         val spark = df.sparkSession
         // Bulk cells: rowkey = epochSec-key (O6 intent), one per distinct
@@ -476,9 +529,12 @@ object StreamJobs {
             val summary = s"Spark - date:${fmt.format(batchTs)} from topic: " +
               s"$topics - number of RDD (batches): ${batchId + 1} - number of message $n"
             import spark.implicits._
-            topicSink.appendBatch(
+            // the topic line and the KV cells are independent once `stats`
+            // is known: the line is written on its own thread while the
+            // upsert runs here
+            val topicWrite = new Forked(topicSink.appendBatch(
               Seq((outTopic, null: String, summary, batchTs))
-                .toDF("topic", "key", "value", "ts"), batchId)
+                .toDF("topic", "key", "value", "ts"), batchId))
             // Cell ts is the BATCH time, as the reference's puts effectively
             // carried (stamped at write time ≈ batch wall clock), so cells of
             // one rowkey tie on ts and the sink's cell_value tiebreak decides:
@@ -491,7 +547,8 @@ object StreamJobs {
             val summaryCell =
               Seq((epochSec.toString, "cf1", "messages", summary, batchTs))
                 .toDF("rowkey", "cf", "qualifier", "cell_value", "ts")
-            kvSink.upsert(spark,
+            // a failed upsert carries a failed topic write as suppressed
+            try kvSink.upsert(spark,
               summaryCell.unionAll(perKey.select(
                 concat(lit(epochSec.toString), lit("-"), coalesce(col("key"), lit("null")))
                   .as("rowkey"),
@@ -499,11 +556,13 @@ object StreamJobs {
                 lit("content").as("qualifier"),
                 col("cell_value"),
                 lit(batchTs).as("ts"))))
+            catch { case e: Throwable => topicWrite.join().foreach(e.addSuppressed); throw e }
+            topicWrite.join().foreach(e => throw e)
           }
         } finally perKey.unpersist()
         ()
       }
-      .start()
+    start(input, writer, checkpoint, SummaryPins: _*)
   }
 
   /** ≈ KafkaStreamerToHbase.main (KafkaStreamerToHbase.scala:87-167):
@@ -516,11 +575,9 @@ object StreamJobs {
       kvSink: KvUpsertSink,
       trigger: Trigger = Trigger.AvailableNow(),
       checkpoint: Option[String] = None): StreamingQuery = {
-    val base = input.writeStream
+    val writer = input.writeStream
       .trigger(trigger)
       .outputMode("append")
-    checkpoint.foreach(base.option("checkpointLocation", _))
-    base
       .foreachBatch { (df: DataFrame, _: Long) =>
         kvSink.upsert(df.sparkSession,
           df.select(
@@ -533,7 +590,7 @@ object StreamJobs {
             col("timestamp").as("ts")))
         ()
       }
-      .start()
+    start(input, writer, checkpoint)
   }
 
   /** Declarative event-time SESSION windows with a watermark — the
@@ -594,9 +651,8 @@ object StreamJobs {
       trigger: Trigger = Trigger.ProcessingTime(0),
       checkpoint: Option[String] = None): StreamingQuery = {
     val counts = windowedCounts(input, window_, watermark)
-    val base = counts.writeStream.outputMode("append").trigger(trigger)
-    checkpoint.foreach(base.option("checkpointLocation", _))
-    base.foreachBatch { (df: DataFrame, batchId: Long) =>
+    val writer = counts.writeStream.outputMode("append").trigger(trigger)
+    writer.foreachBatch { (df: DataFrame, batchId: Long) =>
       if (!df.isEmpty) {
         val w = Window.partitionBy(col("window_start"))
           .orderBy(col("n").desc, col("key"))
@@ -606,7 +662,8 @@ object StreamJobs {
           .filter(col("rk") <= k), batchId)
       }
       ()
-    }.start()
+    }
+    start(input, writer, checkpoint)
   }
 
   /** Streaming distribution-drift monitor — the batch `hellinger_drift`
@@ -633,9 +690,8 @@ object StreamJobs {
       trigger: Trigger = Trigger.ProcessingTime(0),
       checkpoint: Option[String] = None): StreamingQuery = {
     val counts = windowedCounts(input, window_, watermark)
-    val base = counts.writeStream.outputMode("append").trigger(trigger)
-    checkpoint.foreach(base.option("checkpointLocation", _))
-    base.foreachBatch { (df: DataFrame, batchId: Long) =>
+    val writer = counts.writeStream.outputMode("append").trigger(trigger)
+    writer.foreachBatch { (df: DataFrame, batchId: Long) =>
       if (!df.isEmpty) {
         val bl = baseline.select(col("key"), col("qc").cast("long").as("qc"))
         val keys = bl.select(col("key"))
@@ -662,7 +718,8 @@ object StreamJobs {
         out.appendBatch(scored, batchId)
       }
       ()
-    }.start()
+    }
+    start(input, writer, checkpoint)
   }
 
   /** Cross-batch streaming dedup with watermark (D1 generalized). */

@@ -839,12 +839,13 @@ class StreamJobsSpec extends SparkSpec {
       === Seq("v1"))
   }
 
-  test("sink writes start no child process; NioLocalFileSystem sets the " +
-      "requested POSIX bits") {
+  /** The command lines of the child processes this JVM starts while `body`
+    * runs, from a JFR event stream that is first shown to see one. A
+    * collection runs before the window opens, so the cleanup of sessions
+    * that earlier code left unreachable (Spark runs `rm -rf` of a collected
+    * session's artifact directory) lands before it, not in it. */
+  private def processStartsDuring(body: => Unit): Seq[String] = {
     import scala.jdk.CollectionConverters._
-    import org.apache.hadoop.fs.Path
-    import org.apache.hadoop.fs.permission.FsPermission
-    val dir = tmp()
     val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val flushes = new java.util.concurrent.atomic.AtomicInteger()
     val rs = new jdk.jfr.consumer.RecordingStream()
@@ -857,16 +858,31 @@ class StreamJobsSpec extends SparkSpec {
       assert(flushes.get >= target, "the JFR stream stopped flushing")
     }
     try {
+      // Spark's process-tree metrics run `getconf PAGESIZE` once per JVM, at
+      // the first executor heartbeat: run it now, not in the window
+      Class.forName("org.apache.spark.executor.ProcfsMetricsGetter$")
       rs.enable("jdk.ProcessStart")
       rs.onEvent("jdk.ProcessStart", e => started.add(e.getString("command")))
       rs.onFlush(() => flushes.incrementAndGet())
       rs.startAsync()
+      System.gc()
       // control: the stream sees a process start
       new ProcessBuilder("true").start().waitFor()
       drain()
       assert(started.asScala.exists(_.contains("true")), started.toString)
       started.clear()
+      body
+      drain()
+      started.asScala.toSeq
+    } finally rs.close()
+  }
 
+  test("sink writes start no child process; NioLocalFileSystem sets the " +
+      "requested POSIX bits") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.hadoop.fs.permission.FsPermission
+    val dir = tmp()
+    val started = processStartsDuring {
       val topic = new TopicTableSink(dir + "/topic")
       val line = Seq(("out", null: String, "line", new Timestamp(1000L)))
         .toDF("topic", "key", "value", "ts")
@@ -884,9 +900,8 @@ class StreamJobsSpec extends SparkSpec {
       kv.compact(spark, new Timestamp(3000L)) // drops k8's tombstone
       assert(kv.read(spark).count() === 7)
       assert(topic.read(spark).count() === 1)
-      drain()
-      assert(started.isEmpty, started.asScala.mkString("\n"))
-    } finally rs.close()
+    }
+    assert(started.isEmpty, started.mkString("\n"))
 
     val fs = new NioLocalFileSystem
     fs.initialize(java.net.URI.create("file:///"),
@@ -903,6 +918,142 @@ class StreamJobsSpec extends SparkSpec {
     assert(mode(f) === "rw-r-----")
     fs.setPermission(f, new FsPermission("604"))
     assert(mode(f) === "rw----r--")
+  }
+
+  test("summaryPipeline checkpoints start no child process and its batches " +
+      "cache in the stream's own session, under the session's checkpoint " +
+      "manager or a caller's FileContext pin, and start puts the caller's " +
+      "conf back") {
+    val (managerKey, nio) = NioCheckpointFileManager.pin
+    val fileContext =
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
+    val dir = tmp()
+    def run(name: String, sec: Long): org.apache.spark.sql.streaming.StreamingQuery = {
+      val in = MemoryStream[KafkaShaped]
+      val q = StreamJobs.summaryPipeline(in.toDF(), "t", "out",
+        new TopicTableSink(s"$dir/$name/topic"), new KvUpsertSink(s"$dir/$name/kv"),
+        Trigger.ProcessingTime(0), Some(s"$dir/$name/ckpt"))
+      try (0 until 3).foreach { i =>
+        in.addData(rec("a", s"$i", sec + i, i), rec("b", s"$i", sec + i, 10 + i))
+        q.processAllAvailable()
+      } catch { case e: Throwable => graft.streaming.StreamQuiet.quietStop(q); throw e }
+      q
+    }
+    val confBefore = spark.conf.getOption(managerKey)
+    var streamManager: Option[String] = None
+    var cachesInOwnSession = false
+    val started = processStartsDuring {
+      graft.streaming.StreamQuiet.quietStop(run("session", 4000))
+      GraftSession.withConf(spark, managerKey -> fileContext) {
+        val q = run("pinned", 5000)
+        try {
+          assert(spark.conf.get(managerKey) === fileContext) // the caller's pin
+          val exec = q.asInstanceOf[
+            org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper].streamingQuery
+          // protected[sql] in Scala, public in the bytecode
+          val forStream = exec.getClass.getMethod("sparkSessionForStream").invoke(exec)
+            .asInstanceOf[org.apache.spark.sql.SparkSession]
+          streamManager = forStream.conf.getOption(managerKey)
+          // the check Spark's CacheManager makes before it plans a cache()
+          // in a new clone of the session (private[sql] in Scala, public in
+          // the bytecode): a batch's cache() must not clone the session
+          import org.apache.spark.sql.internal.SQLConf
+          val companion = org.apache.spark.sql.classic.SparkSession
+          val cacheSession = companion.getClass.getMethod("getOrCloneSessionWithConfigsOff",
+              classOf[org.apache.spark.sql.classic.SparkSession],
+              classOf[scala.collection.immutable.Seq[_]])
+            .invoke(companion, forStream, Seq(SQLConf.AUTO_BUCKETED_SCAN_ENABLED,
+              SQLConf.ADAPTIVE_EXECUTION_APPLY_FINAL_STAGE_SHUFFLE_OPTIMIZATIONS))
+          cachesInOwnSession = cacheSession eq forStream
+        } finally graft.streaming.StreamQuiet.quietStop(q)
+      }
+    }
+    Seq("session", "pinned").foreach { name =>
+      Seq("offsets", "commits").foreach { log =>
+        assert(new java.io.File(s"$dir/$name/ckpt/$log/2").exists(), s"$name $log")
+      }
+    }
+    val inCkpt = started.filter(_.contains(dir))
+    assert(inCkpt.isEmpty, s"${inCkpt.size} process starts:\n" + inCkpt.mkString("\n"))
+    assert(streamManager === Some(nio))
+    assert(cachesInOwnSession)
+    assert(spark.conf.getOption(managerKey) === confBefore)
+  }
+
+  test("summaryPipeline's overlapped topic write: its failure fails the batch " +
+      "after the KV upsert commits, a restart yields one line per batch and " +
+      "the KV table of an unfailed run, and its job counts under the batch") {
+    import scala.jdk.CollectionConverters._
+    val batches = Seq(
+      Seq(rec("a", "1", 2000, 0), rec("b", "2", 2001, 1)),
+      Seq(rec("a", "3", 3000, 2), rec(null, "4", 3001, 3)))
+    def kvRows(sink: KvUpsertSink) =
+      sink.read(spark).as[(String, String, String, String, Timestamp)].collect().toSet
+    def lines(sink: TopicTableSink) =
+      sink.read(spark).select($"value").as[String].collect().sorted.toSeq
+
+    // the unfailed run, with a listener on every job it starts
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
+    val marker = "graft-stream-jobs-marker"
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(p => p.getProperty("spark.job.description") == marker)) seen.countDown()
+        else jobs.add(props.flatMap(p => Option(p.getProperty("streaming.sql.batchId"))))
+      }
+    }
+    val clean = tmp()
+    val cleanTopic = new TopicTableSink(clean + "/topic")
+    val cleanKv = new KvUpsertSink(clean + "/kv")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val in = MemoryStream[KafkaShaped]
+      val q = StreamJobs.summaryPipeline(in.toDF(), "t", "out", cleanTopic, cleanKv,
+        Trigger.ProcessingTime(0), Some(clean + "/ckpt"))
+      try batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
+      finally graft.streaming.StreamQuiet.quietStop(q)
+      // the listener bus delivers in order: once the marker job is seen,
+      // every job of the run has been
+      spark.sparkContext.setJobDescription(marker)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      assert(seen.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // three jobs a batch (the aggregate and count, the topic line, the KV
+    // upsert), every one of them under its batch id
+    assert(jobs.asScala.toSeq.groupBy(identity).map { case (k, v) => k -> v.size } ===
+      Map(Some("0") -> 3, Some("1") -> 3))
+
+    val dir = tmp()
+    val topicPath = new java.io.File(dir + "/topic")
+    val topicSink = new TopicTableSink(topicPath.getPath)
+    val kvSink = new KvUpsertSink(dir + "/kv")
+    val in = MemoryStream[KafkaShaped]
+    def start() = StreamJobs.summaryPipeline(in.toDF(), "t", "out", topicSink, kvSink,
+      Trigger.ProcessingTime(0), Some(dir + "/ckpt"))
+    // a regular file where the topic table's directory belongs: the topic
+    // write of batch 0 throws
+    assert(topicPath.createNewFile())
+    val q1 = start()
+    in.addData(batches.head: _*)
+    try intercept[org.apache.spark.sql.streaming.StreamingQueryException](q1.processAllAvailable())
+    finally graft.streaming.StreamQuiet.quietStop(q1)
+    assert(!new java.io.File(dir + "/ckpt/commits/0").exists(), "batch 0 committed")
+    // the upsert ran beside the failed write and finished before the batch
+    // failed
+    assert(kvSink.read(spark).filter($"qualifier" === "messages").count() === 1)
+
+    assert(topicPath.delete())
+    val q2 = start() // re-runs batch 0 from the offset log
+    try {
+      q2.processAllAvailable()
+      in.addData(batches(1): _*)
+      q2.processAllAvailable()
+    } finally graft.streaming.StreamQuiet.quietStop(q2)
+    assert(lines(topicSink) === lines(cleanTopic))
+    assert(lines(topicSink).size === 2)
+    assert(kvRows(kvSink) === kvRows(cleanKv))
   }
 
   test("dropDuplicatesWithinWatermark evicts state past the watermark") {
