@@ -48,12 +48,12 @@ object QOps {
     * Rebases the DataFrame on its own physical RDD (a LogicalRDD leaf), so
     * round i+1's logical plan no longer nests round i's — Catalyst
     * re-analyzes a constant-size plan per round instead of an O(rounds)-deep
-    * one (kcore_peel's 12 rounds spent ~50 s in per-round re-analysis and
-    * cache-lookup canonicalization of deepening plans; rebased, the loop is
-    * sub-second per round). Fully distributed — no driver collect; the RDD
-    * chain still recomputes from source if its cache is evicted. The same
-    * role `Dataset.checkpoint` plays for ML iterations, minus the
-    * checkpoint-dir I/O.
+    * one (kcore_peel, at 12 rounds a pass, spent ~50 s in per-round
+    * re-analysis and cache-lookup canonicalization of deepening plans;
+    * rebased, a round is sub-second). Fully distributed — no driver
+    * collect; the RDD chain still recomputes from source if its cache is
+    * evicted. The same role `Dataset.checkpoint` plays for ML iterations,
+    * minus the checkpoint-dir I/O.
     */
   def rebase(df: DataFrame): DataFrame =
     df.sparkSession.createDataFrame(df.rdd, df.schema)

@@ -1104,13 +1104,14 @@ object RelationalOps extends QueryModule {
     * keep only edges backed by ≥ 2 distinct orders (the raw graph's min
     * degree is 42 at sf0.01 — nothing would ever peel), then repeatedly
     * delete nodes whose degree within the surviving subgraph falls below
-    * K = 3, for EXACTLY [[KCORE_ROUNDS]] rounds in both engines — a
-    * bounded-round contract, not peel-to-fixpoint, so the oracle (an
-    * unrolled CTE chain, one per round) computes the identical set without
-    * needing a deletion fixpoint that recursive CTEs cannot express.
-    * At sf0.01 the peel reaches its fixpoint at round 11 (935 survivors),
-    * so the bounded result IS the true 3-core there. Output: each
-    * surviving node with its within-core degree.
+    * K = 3, for [[KCORE_ROUNDS]] rounds — a bounded-round contract, so
+    * the oracle (an unrolled CTE chain, one per round) computes the
+    * identical set without a deletion fixpoint that recursive CTEs cannot
+    * express. The survivor sets are nested, so Spark stops at the first
+    * round that keeps its count: every later round returns the same set.
+    * At sf0.01 round 10 reaches the fixpoint (935 survivors) and round 11
+    * confirms it, so the bounded result IS the true 3-core there. Output:
+    * each surviving node with its within-core degree.
     *
     * Scale posture: each round is ONE semi-join of the (cached) edge list
     * against the current survivor set (dst side only) plus one
@@ -1124,8 +1125,8 @@ object RelationalOps extends QueryModule {
     * the edge subplan — a 2 GB plan string, observed), with one it grows
     * linearly like pagerank's. Each round is materialized (cache + count)
     * and its predecessor unpersisted so execution lineage stays flat.
-    * Rounds are a fixed constant: 12 shuffle stages, independent of data
-    * volume.
+    * Rounds are bounded by a constant: at most 12 shuffle stages,
+    * independent of data volume.
     */
   private val KCORE_K = 3
   private val KCORE_ROUNDS = 12
@@ -1146,8 +1147,9 @@ object RelationalOps extends QueryModule {
   private def kcorePeel(s: SparkSession, dir: String): DataFrame = {
     val edges = supportEdges(s, dir).cache()
     var surv = edges.select(col("src").as("node")).distinct().cache()
-    surv.count()
-    for (_ <- 1 to KCORE_ROUNDS) {
+    var (prev, n, round) = (-1L, surv.count(), 0)
+    while (round < KCORE_ROUNDS && n != prev) { // an unchanged count is the fixpoint
+      round += 1
       // rebase: without it each round's logical plan nests its
       // predecessor's and per-round Catalyst re-analysis dominates
       // (QOps.rebase scaladoc has the numbers)
@@ -1157,7 +1159,8 @@ object RelationalOps extends QueryModule {
         .filter(col("d") >= KCORE_K)
         .select(col("src").as("node")))
         .cache()
-      next.count() // materialize this round before dropping the last
+      prev = n
+      n = next.count() // materialize this round before dropping the last
       surv.unpersist()
       surv = next
     }

@@ -376,67 +376,107 @@ object SimilarityOps extends QueryModule {
       df.withColumn(s"x$i",
         round(element_at(col("embedding"), i + 1).cast("double") * 1e6).cast("long")))
 
+  private def kmFeats(s: SparkSession, dir: String): DataFrame =
+    featsDf(s, dir).select(col("vec_id") +: KM_DIMS.map(i => col(s"x$i")): _*)
+
   private def centsDf(s: SparkSession, c: Seq[(Long, Seq[Double])]): DataFrame =
     s.createDataFrame(c.map { case (cell, m) => (cell, m(0), m(1), m(2), m(3)) })
       .toDF("cell", "c0", "c1", "c2", "c3")
 
+  /** Fixed-order double L2 between the long features `<x>0..3` and the
+    * centroid columns `<c>0..3`: ((d0²+d1²)+d2²)+d3², NULL if any is. */
+  private def l2(x: String, c: String): Column = KM_DIMS.map { i =>
+    val d = col(s"$x$i").cast("double") - col(s"$c$i")
+    d * d
+  }.reduce(_ + _)
+
   /** Nearest-centroid assignment: broadcast k centroid rows against the
     * partitioned scan, fixed-order double L2, argmin ties to lowest cell. */
   private def assignTo(points: DataFrame, cents: DataFrame): DataFrame = {
-    val dist = KM_DIMS.map { i =>
-      val d = col(s"x$i").cast("double") - col(s"c$i")
-      d * d
-    }.reduce(_ + _)
     val w = Window.partitionBy(col("vec_id")).orderBy(col("dist"), col("cell"))
     points.crossJoin(broadcast(cents))
-      .withColumn("dist", dist)
+      .withColumn("dist", l2("x", "c"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .drop("dist", "rn", "c0", "c1", "c2", "c3")
   }
 
-  /** Lloyd's algorithm to convergence (capped at KM_ITERS-1 recomputes to
-    * stay aligned with the SQL unroll): per iteration one broadcast-assign
-    * over the corpus + one k-row aggregate, k centroid rows collected to the
-    * driver (the MLlib shape — the loop carries k·dims doubles, never data;
-    * each iteration's plan starts from a literal centroid table, so lineage
-    * stays flat with no cache chain). Memoized per data dir: training is
-    * deterministic, and both kmeans_trained and ann_ivf consume it.
-    */
-  private val kmMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, Seq[Double])]]()
+  /** Lloyd init: the features of vectors 0..k-1. */
+  private def firstK(feats: DataFrame, k: Int): Seq[(Long, Seq[Double])] =
+    feats.filter(col("vec_id") < k).collect().toSeq.map(r =>
+      (r.getLong(0), KM_DIMS.map(i => r.getLong(i + 1).toDouble)))
 
-  private def collectCents(df: DataFrame): Seq[(Long, Seq[Double])] =
-    df.collect().map(r =>
-      (r.getLong(0), KM_DIMS.map(i => r.getDouble(i + 1)).toSeq))
-      .toSeq.sortBy(_._1)
-
-  /** One Lloyd iteration: assign everything to `c`, return recomputed means. */
-  private[graft] def lloydStep(s: SparkSession, dir: String,
-      c: Seq[(Long, Seq[Double])]): Seq[(Long, Seq[Double])] = {
-    val feats = featsDf(s, dir)
-      .select(col("vec_id") +: KM_DIMS.map(i => col(s"x$i")): _*)
-    collectCents(
-      assignTo(feats, centsDf(s, c)).groupBy(col("cell"))
-        .agg((sum(col("x0")).cast("double") / count(lit(1))).as("c0"),
-          KM_DIMS.tail.map(j =>
-            (sum(col(s"x$j")).cast("double") / count(lit(1))).as(s"c$j")): _*))
-  }
-
-  private[graft] def trainedCentroids(s: SparkSession, dir: String): Seq[(Long, Seq[Double])] =
-    kmMemo.computeIfAbsent(dir, { _ =>
-      var c = collectCents(featsDf(s, dir).filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cell") +:
-          KM_DIMS.map(i => col(s"x$i").cast("double").as(s"c$i")): _*))
+  /** Lloyd's algorithm from `init` to the exact fixpoint, capped at
+    * `maxIters` recomputes (the SQL unroll): the one trainer behind k-means
+    * and every PQ subspace. `features` (vec_id key, 4 µ-quantized longs)
+    * is scanned once into a persisted RDD; each iteration is then ONE
+    * Spark job that plans nothing: broadcast the k centroids, argmin plus
+    * per-cell long sums and counts per partition, `treeAggregate` to the
+    * driver (the MLlib KMeans shape; the loop carries k·4 doubles).
+    * Arithmetic is the SQL recurrence's, bit for bit: [[l2]]'s order,
+    * argmin ties to the lowest cell, a NULL feature makes a NULL distance
+    * (sorts first: the row joins the lowest cell, counts in n, its NULLs
+    * add nothing), ANSI-exact long sums, mean = sum / n in IEEE double,
+    * empty cells dropped. (Where SQL's mean is NULL, a dimension NULL in
+    * every row of a cell, this one reads 0.) */
+  private[graft] def lloyd(features: DataFrame, init: Seq[(Long, Seq[Double])],
+      maxIters: Int): Seq[(Long, Seq[Double])] = {
+    val width = 1 + KM_DIMS.size // per cell: n, then the sums
+    val pts = features.rdd.map(r =>
+      (KM_DIMS.map(i => if (r.isNullAt(i + 1)) 0L else r.getLong(i + 1)).toArray,
+        KM_DIMS.exists(i => r.isNullAt(i + 1)))).cache()
+    def add(a: Array[Long], b: Array[Long]) = {
+      for (i <- a.indices) a(i) = Math.addExact(a(i), b(i))
+      a
+    }
+    try {
+      var c = init.sortBy(_._1)
       var converged = false
-      var i = 0
-      while (i < KM_ITERS - 1 && !converged) {
-        i += 1
-        val cNew = lloydStep(s, dir, c)
+      var it = 0
+      while (it < maxIters && !converged && c.nonEmpty) {
+        it += 1
+        val k = c.size
+        val cents = pts.sparkContext.broadcast(c.map(_._2.toArray).toArray)
+        val acc = pts.mapPartitions { part =>
+          val cs = cents.value
+          val acc = new Array[Long](k * width)
+          part.foreach { case (x, anyNull) =>
+            val o = width * (if (anyNull) 0
+              else (0 until k).minBy(j => sqDist(x, cs(j)))(Ordering.Double.TotalOrdering))
+            acc(o) += 1
+            for (i <- x.indices) acc(o + 1 + i) = Math.addExact(acc(o + 1 + i), x(i))
+          }
+          Iterator.single(acc)
+        }.treeAggregate(new Array[Long](k * width))(add, add)
+        cents.destroy()
+        val cNew = (0 until k).filter(j => acc(j * width) > 0).map { j =>
+          val o = j * width
+          (c(j)._1, KM_DIMS.map(i => acc(o + 1 + i).toDouble / acc(o).toDouble))
+        }
         converged = cNew == c // exact: long sums / IEEE division both engines
         c = cNew
       }
       c
+    } finally pts.unpersist(blocking = false)
+  }
+
+  /** [[l2]] on plain arrays: the same operations in the same order. */
+  private def sqDist(x: Array[Long], m: Array[Double]): Double = {
+    var acc = 0.0
+    for (i <- x.indices) { val d = x(i).toDouble - m(i); acc += d * d }
+    acc
+  }
+
+  /** k = 8 centroids, init = vectors 0..7, memoized per data dir: training
+    * is deterministic, and kmeans_trained, ann_ivf and the cell-based
+    * operators all consume it. */
+  private val kmMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, Seq[Double])]]()
+
+  private[graft] def trainedCentroids(s: SparkSession, dir: String): Seq[(Long, Seq[Double])] =
+    kmMemo.computeIfAbsent(dir, { _ =>
+      val feats = kmFeats(s, dir)
+      lloyd(feats, firstK(feats, 8), KM_ITERS - 1)
     })
 
   /** K-means (k=8) trained to convergence over the first 4 embedding
@@ -447,10 +487,7 @@ object SimilarityOps extends QueryModule {
     * final assignment's per-cell counts and mean vectors.
     */
   private def kmeansTrained(s: SparkSession, dir: String): DataFrame = {
-    val cents = centsDf(s, trainedCentroids(s, dir))
-    val feats = featsDf(s, dir)
-      .select(col("vec_id") +: KM_DIMS.map(i => col(s"x$i")): _*)
-    assignTo(feats, cents)
+    assignTo(kmFeats(s, dir), centsDf(s, trainedCentroids(s, dir)))
       .groupBy(col("cell"))
       .agg(
         count(lit(1)).as("n"),
@@ -532,19 +569,14 @@ object SimilarityOps extends QueryModule {
       .select(col("vec_id") +: (0 until 4).map(j => col(s"y$j")): _*)
 
   private def pqCentsDf(s: SparkSession, c: Seq[(Long, Seq[Double])]): DataFrame =
-    s.createDataFrame(c.map { case (code, v) => (code, v(0), v(1), v(2), v(3)) })
-      .toDF("code", "d0", "d1", "d2", "d3")
+    centsDf(s, c).toDF("code", "d0", "d1", "d2", "d3")
 
   /** Nearest-code assignment for one subspace; keeps the L2 `dist` column
     * (the per-vector quantization error) for the SSE rollup. */
   private def pqAssign(points: DataFrame, cents: DataFrame): DataFrame = {
-    val dist = (0 until 4).map { j =>
-      val d = col(s"y$j").cast("double") - col(s"d$j")
-      d * d
-    }.reduce(_ + _)
     val w = Window.partitionBy(col("vec_id")).orderBy(col("dist"), col("code"))
     points.crossJoin(broadcast(cents))
-      .withColumn("dist", dist)
+      .withColumn("dist", l2("y", "d"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .drop("rn", "d0", "d1", "d2", "d3")
@@ -553,37 +585,11 @@ object SimilarityOps extends QueryModule {
   private val pqMemo =
     new java.util.concurrent.ConcurrentHashMap[(String, Int), Seq[(Long, Seq[Double])]]()
 
-  private def pqCollect(df: DataFrame): Seq[(Long, Seq[Double])] =
-    df.collect().map(r =>
-      (r.getLong(0), (0 until 4).map(j => r.getDouble(j + 1)).toSeq))
-      .toSeq.sortBy(_._1)
-
-  /** One PQ Lloyd iteration for subspace `m`: assign to `c`, recompute means. */
-  private[graft] def pqStep(s: SparkSession, dir: String, m: Int,
-      c: Seq[(Long, Seq[Double])]): Seq[(Long, Seq[Double])] =
-    pqCollect(
-      pqAssign(pqFeats(s, dir, m), pqCentsDf(s, c)).groupBy(col("code"))
-        .agg((sum(col("y0")).cast("double") / count(lit(1))).as("d0"),
-          (1 until 4).map(j =>
-            (sum(col(s"y$j")).cast("double") / count(lit(1))).as(s"d$j")): _*)
-        .select(col("code") +: (0 until 4).map(j => col(s"d$j")): _*))
-
-  /** Per-subspace Lloyd to convergence (same fixpoint/cap discipline as
-    * [[trainedCentroids]]); init = vectors 0..PQ_K-1's subvectors. */
+  /** Subspace `m`'s codebook: [[lloyd]] from vectors 0..PQ_K-1's subvectors. */
   private[graft] def pqCodebook(s: SparkSession, dir: String, m: Int): Seq[(Long, Seq[Double])] =
     pqMemo.computeIfAbsent((dir, m), { _ =>
-      var c = pqCollect(pqFeats(s, dir, m).filter(col("vec_id") < PQ_K)
-        .select(col("vec_id").as("code") +:
-          (0 until 4).map(j => col(s"y$j").cast("double").as(s"d$j")): _*))
-      var converged = false
-      var i = 0
-      while (i < PQ_ITERS - 1 && !converged) {
-        i += 1
-        val cNew = pqStep(s, dir, m, c)
-        converged = cNew == c
-        c = cNew
-      }
-      c
+      val feats = pqFeats(s, dir, m)
+      lloyd(feats, firstK(feats, PQ_K), PQ_ITERS - 1)
     })
 
   /** Product-quantization codebook report — trained operator #4, the PQ
@@ -597,9 +603,9 @@ object SimilarityOps extends QueryModule {
     * reconstruction centroid, and the exact SSE — the quantization-error
     * budget that decides PQ bit-width in production ANN.
     *
-    * Scale posture: each subspace's training is the k-means shape (per
-    * iteration one broadcast-assign + one k-row aggregate; the loop
-    * carries k·4 doubles to the driver, memoized per dir); the report is
+    * Scale posture: each subspace trains through the k-means kernel
+    * ([[lloyd]]: one Spark job per iteration over features scanned once;
+    * the loop carries k·4 doubles, memoized per dir); the report is
     * 4 assign-passes + 16-group aggregates. Determinism: µ-quantized
     * features, fixed-order double L2, argmin ties to the lowest code,
     * per-vector SSE quantized to µ-unit² longs before the order-free sum.
@@ -709,14 +715,10 @@ object SimilarityOps extends QueryModule {
         .select(col("vec_id"), col("code").as(s"k$m"))
     }.reduce(_.join(_, "vec_id"))
     val luts = PQ_SUBS.map { m =>
-      val dist = (0 until 4).map { j =>
-        val d = col(s"y$j").cast("double") - col(s"d$j")
-        d * d
-      }.reduce(_ + _)
       pqFeats(s, dir, m).filter(col("vec_id") < 20)
         .crossJoin(broadcast(pqCentsDf(s, pqCodebook(s, dir, m))))
         .select(col("vec_id").as("q_id"), col("code").as(s"k$m"),
-          dist.as(s"l$m"))
+          l2("y", "d").as(s"l$m"))
     }
     val probeIds = emb(s, dir).select(col("vec_id").as("q_id"))
       .filter(col("q_id") < 20)
@@ -839,13 +841,9 @@ object SimilarityOps extends QueryModule {
       col("vec_id").as(s"${p}_id") +: col("embedding").as(s"${p}_emb") +:
         col("norm2").as(s"${p}_norm2") +: KM_DIMS.map(i => col(s"x$i")): _*)
     def nearestCells(src: DataFrame, id: String, keep: Int): DataFrame = {
-      val dist = KM_DIMS.map { i =>
-        val d = col(s"x$i").cast("double") - col(s"c$i")
-        d * d
-      }.reduce(_ + _)
       val w = Window.partitionBy(col(id)).orderBy(col("dist"), col("cell"))
       src.crossJoin(broadcast(cents))
-        .withColumn("dist", dist)
+        .withColumn("dist", l2("x", "c"))
         .withColumn("crk", row_number().over(w))
         .filter(col("crk") <= keep)
         .drop("dist", "crk", "c0", "c1", "c2", "c3")
@@ -1105,12 +1103,9 @@ object SimilarityOps extends QueryModule {
     * Assignment is the broadcast argmin; the per-cell top-k is the bounded
     * rank-filter idiom the TopKPerKey rewrite compiles to a heap. */
   private def clusterBalancedSample(s: SparkSession, dir: String): DataFrame = {
-    val cents = centsDf(s, trainedCentroids(s, dir))
-    val feats = featsDf(s, dir)
-      .select(col("vec_id") +: KM_DIMS.map(i => col(s"x$i")): _*)
     val w = Window.partitionBy(col("cell"))
       .orderBy(col("hk"), col("vec_id"))
-    assignTo(feats, cents)
+    assignTo(kmFeats(s, dir), centsDf(s, trainedCentroids(s, dir)))
       .withColumn("hk", md5(col("vec_id").cast("string")))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= 3)
@@ -1447,10 +1442,8 @@ object SimilarityOps extends QueryModule {
     * aggregate-sized.
     */
   private def clusterTopterms(s: SparkSession, dir: String): DataFrame = {
-    val cents = centsDf(s, trainedCentroids(s, dir))
-    val feats = featsDf(s, dir)
-      .select(col("vec_id") +: KM_DIMS.map(i => col(s"x$i")): _*)
-    val assign = assignTo(feats, cents).select(col("vec_id"), col("cell"))
+    val assign = assignTo(kmFeats(s, dir), centsDf(s, trainedCentroids(s, dir)))
+      .select(col("vec_id"), col("cell"))
     // cached: feeds per-cell lengths, per-term cell-df, and the output
     val ct = Tables.t(s, dir, "documents")
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))

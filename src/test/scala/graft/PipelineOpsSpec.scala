@@ -1,6 +1,12 @@
 package graft
 
+import graft.operators.SimilarityOps
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Round-3 pipeline operators: clustering, MERGE, percentiles, navigation
   * windows, salted skew join, deterministic splits/samples.
@@ -538,13 +544,174 @@ class PipelineOpsSpec extends SparkSpec {
     assert(got === fix)
   }
 
+  private val sf01 = java.nio.file.Paths.get(sf001).resolveSibling("sf0.01").toString
+
+  /** (vec_id, the 4 µ-quantized features of embedding dims off+1..off+4):
+    * k-means reads off = 0, PQ subspace m off = 4m. */
+  private def lloydFeats(emb: DataFrame, off: Int): DataFrame =
+    emb.select($"vec_id" +: (0 until 4).map(i =>
+      round(element_at($"embedding", off + i + 1).cast("double") * 1e6)
+        .cast("long").as(s"x$i")): _*)
+
+  private def lloydInit(feats: DataFrame, k: Int): Seq[(Long, Seq[Double])] =
+    feats.filter($"vec_id" < k).as[(Long, Long, Long, Long, Long)].collect()
+      .map { case (id, a, b, c, d) => (id, Seq(a, b, c, d).map(_.toDouble)) }
+      .toSeq.sortBy(_._1)
+
+  /** The reference Lloyd step, the DataFrame shape the kernel replaced:
+    * crossJoin the centroid rows, row_number argmin over (dist, cell),
+    * groupBy means — the oracle's recursive term. */
+  private def lloydStepRef(feats: DataFrame,
+      c: Seq[(Long, Seq[Double])]): Seq[(Long, Seq[Double])] = {
+    val cents = c.map { case (cell, m) => (cell, m(0), m(1), m(2), m(3)) }
+      .toDF("cell", "c0", "c1", "c2", "c3")
+    val dist = (0 until 4).map { i =>
+      val d = col(s"x$i").cast("double") - col(s"c$i")
+      d * d
+    }.reduce(_ + _)
+    val w = Window.partitionBy($"vec_id").orderBy($"dist", $"cell")
+    feats.crossJoin(broadcast(cents))
+      .withColumn("dist", dist)
+      .withColumn("rn", row_number().over(w))
+      .filter($"rn" === 1)
+      .groupBy($"cell")
+      .agg((sum($"x0").cast("double") / count(lit(1))).as("c0"), (1 until 4).map(i =>
+        (sum(col(s"x$i")).cast("double") / count(lit(1))).as(s"c$i")): _*)
+      .collect().map(r => (r.getLong(0), (1 to 4).map(r.getDouble).toSeq))
+      .toSeq.sortBy(_._1)
+  }
+
+  /** Walks the reference from vectors 0..k-1 to its fixpoint (the 39-step
+    * cap as the SQL unroll), asserting one kernel step equals one reference
+    * step at every iteration and the whole kernel run equals the end. */
+  private def assertLloydMatchesRef(feats: DataFrame, k: Int, what: String)
+      : Seq[(Long, Seq[Double])] = {
+    val init = lloydInit(feats, k)
+    var c = init
+    var converged = false
+    var it = 0
+    while (it < 39 && !converged) {
+      it += 1
+      val ref = lloydStepRef(feats, c)
+      assert(SimilarityOps.lloyd(feats, c, 1) === ref, s"$what, iteration $it")
+      converged = ref == c
+      c = ref
+    }
+    assert(converged, s"$what did not converge within the SQL unroll")
+    assert(SimilarityOps.lloyd(feats, init, 39) === c, what)
+    c
+  }
+
   test("kmeans_trained centroids are a Lloyd fixpoint within the SQL unroll") {
     // Spark stops early at convergence while the oracle unrolls KM_ITERS
     // iterations; they agree only if the training REALLY converged (one
     // more step must be the identity)
-    val c = graft.operators.SimilarityOps.trainedCentroids(spark, sf001)
-    assert(graft.operators.SimilarityOps.lloydStep(spark, sf001, c) === c)
+    val c = SimilarityOps.trainedCentroids(spark, sf001)
+    val feats = lloydFeats(Tables.t(spark, sf001, "embeddings"), 0)
+    assert(lloydStepRef(feats, c) === c)
     assert(c.nonEmpty && c.size <= 8)
+  }
+
+  test("the Lloyd kernel equals the DataFrame Lloyd step at every iteration, " +
+      "for k-means and every PQ subspace") {
+    val dirs = Seq(sf001, sf01, "perfbench/data",
+      "fixtures/hostile_embeddings")
+    for (dir <- dirs) {
+      val emb = Tables.t(spark, dir, "embeddings")
+      val km = assertLloydMatchesRef(lloydFeats(emb, 0), 8, s"$dir k-means")
+      assert(SimilarityOps.trainedCentroids(spark, dir) === km, dir)
+      for (m <- 0 until 4) {
+        val pq = assertLloydMatchesRef(lloydFeats(emb, 4 * m), 4, s"$dir PQ $m")
+        assert(SimilarityOps.pqCodebook(spark, dir, m) === pq, s"$dir PQ $m")
+      }
+    }
+    // a NULL element (NULL distance: sorts first, so the row joins the
+    // lowest cell and counts in its n) and an exact tie: vector 2 sits
+    // 25 µ-units² from both initial centroids, so it must join cell 0
+    val f = (v: Float) => Some(v)
+    val tiny = Seq(
+      (0L, Seq(f(0f), f(0f), f(0f), f(0f))),
+      (1L, Seq(f(1e-5f), f(0f), f(0f), f(0f))),
+      (2L, Seq(f(5e-6f), f(0f), f(0f), f(0f))),
+      (3L, Seq(f(9e-6f), f(0f), None, f(0f))),
+      (4L, Seq(f(2e-5f), f(0f), f(0f), f(0f)))).toDF("vec_id", "embedding")
+    val c = assertLloydMatchesRef(lloydFeats(tiny, 0), 2, "in-test table")
+    assert(c === Seq((0L, Seq(14.0 / 3, 0.0, 0.0, 0.0)), (1L, Seq(15.0, 0.0, 0.0, 0.0))))
+  }
+
+  /** Runs `body` under a fresh job group; returns its result with the
+    * Spark jobs and the SQL executions the group started. */
+  private def underJobGroup[T](body: => T)
+      : (T, Seq[java.util.Properties], Seq[SparkListenerSQLExecutionStart]) = {
+    val sc = spark.sparkContext
+    val group = s"graft-jobs-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
+    val sqls = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerSQLExecutionStart]()
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          if (p.getProperty("spark.jobGroup.id") == group) jobs.add(p)
+          else if (p.getProperty("spark.job.description") == s"$group-end") seen.countDown()
+        }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart if x.jobGroupId.contains(group) => sqls.add(x)
+        case _ =>
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      val out = try body finally sc.clearJobGroup()
+      // the listener bus delivers in order: once the marker job is seen,
+      // every event of `body` has been
+      sc.setJobDescription(s"$group-end")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(seen.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      (out, jobs.asScala.toSeq, sqls.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("trainedCentroids runs one Spark job per Lloyd iteration") {
+    // a fresh dir: the centroids are memoized per dir
+    val dir = java.nio.file.Files.createTempDirectory("graft-lloyd-jobs")
+    val file = java.nio.file.Files.copy(
+      java.nio.file.Paths.get(sf01, "embeddings.parquet"),
+      dir.resolve("embeddings.parquet"))
+    try {
+      val feats = lloydFeats(Tables.t(spark, dir.toString, "embeddings"), 0)
+      var (c, iters, converged) = (lloydInit(feats, 8), 0, false)
+      while (!converged && iters < 39) {
+        val next = SimilarityOps.lloyd(feats, c, 1)
+        converged = next == c
+        c = next
+        iters += 1
+      }
+      val (trained, jobs, _) =
+        underJobGroup(SimilarityOps.trainedCentroids(spark, dir.toString))
+      assert(trained === c)
+      // one job per iteration, plus the init's collect
+      assert(iters > 2 && jobs.size <= iters + 2, s"${jobs.size} jobs for $iters iterations")
+    } finally {
+      java.nio.file.Files.delete(file)
+      java.nio.file.Files.delete(dir)
+    }
+  }
+
+  test("kcore_peel stops one round past its fixpoint") {
+    // every round rebases its survivor set once, so the query's SQL
+    // executions started through QOps.rebase count its rounds
+    def rounds(dir: String): Int = {
+      val (_, jobs, sqls) = underJobGroup(SparkEntry.queries("kcore_peel")(spark, dir))
+      spark.catalog.clearCache()
+      val n = sqls.count(_.details.contains("graft.QOps$.rebase"))
+      assert(n > 0, s"$dir: ${jobs.size} jobs, no round seen")
+      n
+    }
+    // the benchmark's slice peels to empty in round 1, round 2 confirms
+    assert(rounds("perfbench/data") <= 3)
+    // sf0.01 reaches its 935 survivors in round 10, round 11 confirms
+    assert(rounds(sf01) === 11)
   }
 
   test("pq_quantization: every subspace codebook is a Lloyd fixpoint, " +
@@ -552,9 +719,9 @@ class PipelineOpsSpec extends SparkSpec {
     // fixpoint per subspace (the oracle unrolls PQ_ITERS; agreement needs
     // real convergence — one more step must be the identity)
     val books = (0 until 4).map { m =>
-      val c = graft.operators.SimilarityOps.pqCodebook(spark, sf001, m)
-      assert(graft.operators.SimilarityOps.pqStep(spark, sf001, m, c) === c,
-        s"subspace $m did not converge")
+      val c = SimilarityOps.pqCodebook(spark, sf001, m)
+      val feats = lloydFeats(Tables.t(spark, sf001, "embeddings"), 4 * m)
+      assert(lloydStepRef(feats, c) === c, s"subspace $m did not converge")
       assert(c.nonEmpty && c.size <= 4)
       m -> c.toMap
     }.toMap
@@ -591,7 +758,7 @@ class PipelineOpsSpec extends SparkSpec {
   test("pq_ann_eval: ADC recall equals the plain-Scala recount and beats " +
       "the chance floor") {
     val books = (0 until 4).map(m =>
-      m -> graft.operators.SimilarityOps.pqCodebook(spark, sf001, m).toMap).toMap
+      m -> SimilarityOps.pqCodebook(spark, sf001, m).toMap).toMap
     val embs = Tables.t(spark, sf001, "embeddings")
       .select($"vec_id", $"embedding").as[(Long, Array[Float])].collect()
       .sortBy(_._1)

@@ -103,6 +103,11 @@ class PlanShapeSpec extends SparkSpec {
     assert(membersContaining(dedup, "while (changed > 0)") === Seq())
   }
 
+  test("k-means and the PQ codebooks train through one Lloyd fixpoint loop") {
+    val sim = java.nio.file.Paths.get("src/main/scala/graft/operators/SimilarityOps.scala")
+    assert(membersContaining(sim, "converged") === Seq("lloyd"))
+  }
+
   test("kmv_distinct k-smallest is heap-bounded BEFORE the shuffle") {
     // the aggregate-over-rank idiom rewritten into the bounded-heap
     // TopKPerKey: the shuffle carries at most k rows per group per input
