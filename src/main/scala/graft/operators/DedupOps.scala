@@ -83,7 +83,8 @@ object DedupOps extends QueryModule {
   // ---- n-gram Jaccard -----------------------------------------------------
 
   /** Document-frequency cap for the exact-pair candidate generators: a
-    * shingle with df > DF_CAP never generates candidate pairs. This is what
+    * shingle with df > DF_CAP never generates candidate pairs (read off the
+    * rarity order as [[rarityArr]]'s `nc`, never re-joined). This is what
     * bounds candidate volume LINEARLY: Σ_{df≤K} df² ≤ K·Σ df = K × (total
     * shingle occurrences), so a 10× corpus costs ≤ 10× — the uncapped
     * inverted-index self-join's Σ df² is quadratic wherever boilerplate
@@ -100,20 +101,22 @@ object DedupOps extends QueryModule {
     * shingles) while cutting candidate mass 25×. */
   private val DF_CAP = 64L
 
-  /** Per-doc rarity-sorted distinct shingle-hash arrays: (doc_id, ta =
-    * hashes in global (df, h) rarity order, sz). The shared spine of the
-    * exact-pair family — prefixes slice from the front (rarest first),
-    * verification intersects the full arrays. Caller caches. */
-  private def rarityArr(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+  /** The exact-pair family's shared spine, one row per doc: (doc_id, ta =
+    * its distinct shingle hashes in global (df, h) rarity order, sz = |ta|,
+    * nc = how many have df ≤ [[DF_CAP]]). ta sorts by df first, so its
+    * capped hashes are exactly its first nc: a capped rarity prefix is
+    * `slice(ta, 1, least(nc, len))`, and verification intersects whole
+    * arrays. The only reader of document frequencies; caller caches. */
+  private def rarityArr(s: SparkSession, dir: String): DataFrame = {
     val base = shingles(s, dir).select(col("doc_id"), h64(col("sh")).as("h"))
       .distinct()
     val dfreq = base.groupBy(col("h")).agg(count(lit(1)).as("df"))
-    val arr = base.join(dfreq, "h")
+    base.join(dfreq, "h")
       .groupBy(col("doc_id"))
       .agg(transform(sort_array(collect_list(struct(col("df"), col("h")))),
-        x => x.getField("h")).as("ta"))
+        x => x.getField("h")).as("ta"),
+        count(when(col("df") <= DF_CAP, 1)).cast("int").as("nc"))
       .withColumn("sz", size(col("ta")).cast("long"))
-    (arr, dfreq)
   }
 
   /** Identical-text doc pairs via one md5 group — the lossless channel that
@@ -144,13 +147,11 @@ object DedupOps extends QueryModule {
     * 49× cost for 10× data; this form's candidate mass is ≤ DF_CAP ×
     * shingle occurrences by construction. */
   private def ngramJaccard(s: SparkSession, dir: String): DataFrame = {
-    val (arrRaw, dfreq) = rarityArr(s, dir)
-    val arr = arrRaw.cache() // feeds the prefix explode AND both verify sides
-    // prefix length s − ⌈3s/10⌉ + 1 (τ = 0.3); df-cap via semi-join shape
+    val arr = rarityArr(s, dir).cache() // feeds the prefix explode AND both verify sides
+    // prefix length s − ⌈3s/10⌉ + 1 (τ = 0.3), capped at the nc rarest
     val pre = arr.select(col("doc_id"), col("sz"),
-      explode(expr("slice(ta, 1, CAST(sz - ((3 * sz + 9) div 10) + 1 AS INT))"))
+      explode(expr("slice(ta, 1, least(nc, CAST(sz - ((3 * sz + 9) div 10) + 1 AS INT)))"))
         .as("h"))
-      .join(dfreq.filter(col("df") <= DF_CAP).select(col("h")), "h")
     val candP = pre.as("a").join(pre.as("b"),
         col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id") &&
           lit(10L) * least(col("a.sz"), col("b.sz")) >=
@@ -172,6 +173,40 @@ object DedupOps extends QueryModule {
     // pass would re-execute the banded self-join for a few-dozen-row output
     graft.QOps.ordered1(ver, col("a_id"), col("b_id"))
   }
+
+  private def ngramJaccardSql: String =
+    s"""WITH sh AS MATERIALIZED ($shinglesSql),
+       |base AS (SELECT DISTINCT doc_id, ${h64Sql("sh")} AS h FROM sh),
+       |dfreq AS (SELECT h, CAST(COUNT(*) AS BIGINT) AS df FROM base GROUP BY 1),
+       |arr AS MATERIALIZED (
+       |  SELECT doc_id, list(h ORDER BY df, h) AS ta,
+       |    CAST(COUNT(*) AS BIGINT) AS sz
+       |  FROM base JOIN dfreq USING (h) GROUP BY doc_id
+       |), pre AS (
+       |  SELECT p.doc_id, p.sz, p.h
+       |  FROM (SELECT doc_id, sz,
+       |          unnest(list_slice(ta, 1,
+       |            CAST(sz - ((3 * sz + 9) // 10) + 1 AS INT))) AS h
+       |        FROM arr) p
+       |  JOIN dfreq USING (h) WHERE df <= $DF_CAP
+       |), cand AS (
+       |  SELECT a.doc_id AS a_id, b.doc_id AS b_id
+       |  FROM pre a JOIN pre b
+       |    ON a.h = b.h AND a.doc_id < b.doc_id
+       |   AND 10 * LEAST(a.sz, b.sz) >= 3 * GREATEST(a.sz, b.sz)
+       |  UNION
+       |  $sameTextPairsSql
+       |), ver AS (
+       |  SELECT a_id, b_id,
+       |    CAST(len(list_intersect(x.ta, y.ta)) AS BIGINT) AS inter,
+       |    x.sz AS na, y.sz AS nb
+       |  FROM cand JOIN arr x ON x.doc_id = a_id JOIN arr y ON y.doc_id = b_id
+       |)
+       |SELECT a_id, b_id, inter,
+       |       inter * 1.0 / (na + nb - inter) AS jaccard
+       |FROM ver
+       |WHERE inter * 1.0 / (na + nb - inter) >= 0.3
+       |ORDER BY a_id, b_id""".stripMargin
 
   // ---- MinHash + LSH ------------------------------------------------------
 
@@ -1166,16 +1201,14 @@ object DedupOps extends QueryModule {
   private val PPJ_TAU_DEN = 5L
 
   private def jaccardPrefixCore(s: SparkSession, dir: String): DataFrame = {
-    // per-doc shingle-hash array in global (df, h) rarity order; cached —
-    // feeds the prefix explode AND the pair verify (Q caching contract)
-    val (arrRaw, dfreq) = rarityArr(s, dir)
-    val arr = arrRaw.cache()
-    // prefix length s − ⌈τs⌉ + 1 with ⌈3s/5⌉ = (3s+4) div 5 (s ≥ 0)
+    // cached: feeds the prefix explode AND the pair verify (Q caching contract)
+    val arr = rarityArr(s, dir).cache()
+    // prefix length s − ⌈τs⌉ + 1 with ⌈3s/5⌉ = (3s+4) div 5 (s ≥ 0),
+    // capped at the nc rarest
     val pre = arr.select(col("doc_id"), col("sz"),
       explode(expr(
-        s"slice(ta, 1, CAST(sz - (($PPJ_TAU_NUM * sz + ${PPJ_TAU_DEN - 1}) div $PPJ_TAU_DEN) + 1 AS INT))"))
+        s"slice(ta, 1, least(nc, CAST(sz - (($PPJ_TAU_NUM * sz + ${PPJ_TAU_DEN - 1}) div $PPJ_TAU_DEN) + 1 AS INT)))"))
         .as("h"))
-      .join(dfreq.filter(col("df") <= DF_CAP).select(col("h")), "h")
     val cand = pre.as("a").join(pre.as("b"),
         col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id") &&
           lit(PPJ_TAU_DEN) * least(col("a.sz"), col("b.sz")) >=
@@ -1471,15 +1504,13 @@ object DedupOps extends QueryModule {
     * emitted rows carry the true containment. Round 10 measured the
     * uncapped inverted-index form at 66× cost for 10× data. */
   private def containmentPairs(s: SparkSession, dir: String): DataFrame = {
-    val (arrRaw, dfreq) = rarityArr(s, dir)
-    val arr = arrRaw.cache()
-    val capped = dfreq.filter(col("df") <= DF_CAP).select(col("h"))
-    // inner prefix: rarest ⌊sz/5⌋+1 hashes (lossless at τ = 0.8)
+    val arr = rarityArr(s, dir).cache()
+    // inner prefix: rarest ⌊sz/5⌋+1 hashes (lossless at τ = 0.8); both
+    // sides capped at the nc rarest
     val preI = arr.select(col("doc_id"), col("sz"),
-      explode(expr("slice(ta, 1, CAST(sz div 5 + 1 AS INT))")).as("h"))
-      .join(capped, "h")
-    val full = arr.select(col("doc_id"), col("sz"), explode(col("ta")).as("h"))
-      .join(capped, "h")
+      explode(expr("slice(ta, 1, least(nc, CAST(sz div 5 + 1 AS INT)))")).as("h"))
+    val full = arr.select(col("doc_id"), col("sz"),
+      explode(expr("slice(ta, 1, nc)")).as("h"))
     val candP = preI.as("a").join(full.as("b"),
         col("a.h") === col("b.h") && col("a.doc_id") =!= col("b.doc_id") &&
           lit(5L) * col("b.sz") >= lit(4L) * col("a.sz"))
@@ -1928,39 +1959,7 @@ object DedupOps extends QueryModule {
     Q("exact_dedup", exactDedup, Some(
       """SELECT MIN(doc_id) AS keep_id, CAST(COUNT(*) AS BIGINT) AS n_copies
         |FROM documents GROUP BY md5(text) ORDER BY keep_id""".stripMargin)),
-    Q("ngram_jaccard_pairs", ngramJaccard, Some(
-      s"""WITH sh AS MATERIALIZED ($shinglesSql),
-         |base AS (SELECT DISTINCT doc_id, ${h64Sql("sh")} AS h FROM sh),
-         |dfreq AS (SELECT h, CAST(COUNT(*) AS BIGINT) AS df FROM base GROUP BY 1),
-         |arr AS MATERIALIZED (
-         |  SELECT doc_id, list(h ORDER BY df, h) AS ta,
-         |    CAST(COUNT(*) AS BIGINT) AS sz
-         |  FROM base JOIN dfreq USING (h) GROUP BY doc_id
-         |), pre AS (
-         |  SELECT p.doc_id, p.sz, p.h
-         |  FROM (SELECT doc_id, sz,
-         |          unnest(list_slice(ta, 1,
-         |            CAST(sz - ((3 * sz + 9) // 10) + 1 AS INT))) AS h
-         |        FROM arr) p
-         |  JOIN dfreq USING (h) WHERE df <= $DF_CAP
-         |), cand AS (
-         |  SELECT a.doc_id AS a_id, b.doc_id AS b_id
-         |  FROM pre a JOIN pre b
-         |    ON a.h = b.h AND a.doc_id < b.doc_id
-         |   AND 10 * LEAST(a.sz, b.sz) >= 3 * GREATEST(a.sz, b.sz)
-         |  UNION
-         |  $sameTextPairsSql
-         |), ver AS (
-         |  SELECT a_id, b_id,
-         |    CAST(len(list_intersect(x.ta, y.ta)) AS BIGINT) AS inter,
-         |    x.sz AS na, y.sz AS nb
-         |  FROM cand JOIN arr x ON x.doc_id = a_id JOIN arr y ON y.doc_id = b_id
-         |)
-         |SELECT a_id, b_id, inter,
-         |       inter * 1.0 / (na + nb - inter) AS jaccard
-         |FROM ver
-         |WHERE inter * 1.0 / (na + nb - inter) >= 0.3
-         |ORDER BY a_id, b_id""".stripMargin)),
+    Q("ngram_jaccard_pairs", ngramJaccard, Some(ngramJaccardSql)),
     Q("minhash_signatures", minhashSig, Some(minhashSigSql + "\nORDER BY doc_id")),
     Q("minhash_lsh_pairs", minhashLsh, Some(minhashLshSql)),
     Q("minhash_calibration", minhashCalibration, Some(minhashCalibrationSql)),

@@ -103,6 +103,14 @@ class PlanShapeSpec extends SparkSpec {
     assert(membersContaining(dedup, "while (changed > 0)") === Seq())
   }
 
+  test("the exact-pair family reads document frequencies in one member") {
+    // the oracle SQL members keep their own dfreq join: they are the
+    // independent statement the operators are checked against
+    val dedup = java.nio.file.Paths.get("src/main/scala/graft/operators/DedupOps.scala")
+    assert(membersContaining(dedup, "dfreq").filterNot(_.endsWith("Sql")) ===
+      Seq("rarityArr"))
+  }
+
   test("k-means and the PQ codebooks train through one Lloyd fixpoint loop") {
     val sim = java.nio.file.Paths.get("src/main/scala/graft/operators/SimilarityOps.scala")
     assert(membersContaining(sim, "converged") === Seq("lloyd"))
